@@ -35,8 +35,10 @@ attached frame, so an annotated result that is never released keeps
 those objects alive for its own lifetime — by design, since the JVM
 cache they pin was already leaked without a release path.
 
-Streaming sinks don't need this: their per-batch persists are consumed
-inside the foreachBatch function and already unpersist in ``finally``.
+The manifest-committed ingest sinks don't need this: their per-batch
+persists and checkpoints are consumed inside the foreachBatch function
+and freed by one per-batch release scope (streaming/sinks._IngestBatch,
+released in ``finally`` by the shared _gated_ingest skeleton).
 """
 
 from __future__ import annotations
@@ -105,8 +107,9 @@ def persistent_rdd_ids(spark) -> frozenset:
     before a localCheckpoint, diff after, to learn which blocks a
     specific checkpoint created. The diff assumes no OTHER driver
     thread is creating persistent RDDs in the same window (true for
-    this repo's batch operators; streaming sinks manage their own
-    per-batch persists with try/finally and never checkpoint)."""
+    this repo's batch operators and for the ingest sinks' per-batch
+    release scope, streaming/sinks._IngestBatch, which diffs the same
+    way to free the batch's checkpoint blocks)."""
     return frozenset(
         spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     )

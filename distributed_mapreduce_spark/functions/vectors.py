@@ -207,13 +207,9 @@ def round12_decimal_mean_sql(expr: str) -> str:
     )
 
 
-def round12_decimal_sum(c: Column) -> Column:
-    """round12_decimal_mean without the division — the exact
-    order-free SUM staging (power iteration's s-accumulation)."""
-    return F.round(F.sum(F.round(c, 12).cast("decimal(22,12)")).cast("double"), 12)
-
-
 def round12_decimal_sum_sql(expr: str) -> str:
+    """round12_decimal_mean_sql without the division — the exact
+    order-free SUM staging (power iteration's s-accumulation)."""
     return (
         f"round(CAST(sum(CAST(round({expr}, 12) AS DECIMAL(22,12)))"
         f" AS DOUBLE), 12)"

@@ -48,10 +48,9 @@ from distributed_mapreduce_spark.operators.kv import (
     key2shard,
     key2shard_py,
 )
+from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
 from distributed_mapreduce_spark.streaming.sinks import (
-    _committed_manifests,
     _newest_recorded_schema,
-    _write_manifest,
     read_current_partitioned,
 )
 
@@ -77,7 +76,8 @@ def foreach_batch_kv_serving(
     import pathlib
 
     store = pathlib.Path(store_path)
-    committed = _committed_manifests(store_path)
+    vm = VersionManifests(store_path)
+    committed = vm.committed()
     if committed:
         pin = committed[0][1]
         rec = _newest_recorded_schema(committed)
@@ -109,13 +109,12 @@ def foreach_batch_kv_serving(
             ]
             if not touched:
                 # dense version chain, same rationale as the CDC sink
-                (store / f"v={batch_id}").mkdir(parents=True, exist_ok=True)
-                _write_manifest(
-                    store / f"v={batch_id}", [], NSHARDS, False, "key",
+                vm.commit(
+                    batch_id, [], NSHARDS, False, "key",
                     schema=_KV_SCHEMA, bucket_expr="key2shard",
                 )
                 return
-            manifests = _committed_manifests(store_path, below=batch_id)
+            manifests = vm.committed(below=batch_id)
             current: dict[int, int] = {}
             for v, m in manifests:
                 for p in m["touched"]:
@@ -141,8 +140,8 @@ def foreach_batch_kv_serving(
             ).write.mode("overwrite").partitionBy("p").parquet(
                 str(store / f"v={batch_id}")
             )
-            _write_manifest(
-                store / f"v={batch_id}", touched, NSHARDS, False, "key",
+            vm.commit(
+                batch_id, touched, NSHARDS, False, "key",
                 schema=_KV_SCHEMA, bucket_expr="key2shard",
             )
         finally:

@@ -61,25 +61,6 @@ pytestmark = pytest.mark.skipif(
     reason="sf1 stress smoke is opt-in: set DMR_SF1_STRESS=1",
 )
 
-# The ingest-scaling tests assert on the sinks' per-batch gate_bytes
-# manifest stamps, which are opt-in instrumentation (r11 ADVICE — a
-# recursive stat walk the production hot path shouldn't pay): turn
-# them on for this suite only. foreachBatch callbacks run driver-side
-# in this process, so the env is visible to the sinks. Scoped to an
-# autouse fixture (r12 ADVICE) — a module-level set would execute at
-# pytest collection even when the suite is skipped, re-enabling the
-# gate_bytes stat walk process-wide for later-collected suites and
-# leaving the production-default no-gate_bytes path never exercised.
-@pytest.fixture(scope="module", autouse=True)
-def _sink_evidence_env():
-    prev = os.environ.get("DMR_SINK_EVIDENCE")
-    os.environ["DMR_SINK_EVIDENCE"] = "1"
-    yield
-    if prev is None:
-        os.environ.pop("DMR_SINK_EVIDENCE", None)
-    else:
-        os.environ["DMR_SINK_EVIDENCE"] = prev
-
 SF01 = "/root/testdata/sf0.1"
 REPLICAS = 10
 
@@ -419,8 +400,8 @@ def test_sf1_compact_store_replay_10x_batches(stress_spark, tmp_path):
     import pyarrow.parquet as pq2
 
     from distributed_mapreduce_spark.streaming import event_stream
+    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
     from distributed_mapreduce_spark.streaming.sinks import (
-        _committed_manifests,
         compact_store_partitioned,
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
@@ -478,11 +459,11 @@ def test_sf1_compact_store_replay_10x_batches(stress_spark, tmp_path):
     t0 = time.perf_counter()
     s1 = str(tmp_path / "s1")
     run(s1, str(tmp_path / "ckpt1"))
-    assert len(_committed_manifests(s1)) == n_batches
+    assert len(VersionManifests(s1).committed()) == n_batches
 
     s2 = str(tmp_path / "s2")
     compact_store_partitioned(stress_spark, s1, s2, "k")
-    assert len(_committed_manifests(s2)) == 1
+    assert len(VersionManifests(s2).committed()) == 1
 
     for b in range(n_batches, n_batches + 4):
         rows = [(b * 1000 + k, k, "up", -b - k) for k in range(0, keys, 2)]
@@ -509,7 +490,7 @@ def test_sf1_compact_store_replay_10x_batches(stress_spark, tmp_path):
 # 10× feed volume over ≥12 micro-batches. These are the tests that turn
 # the r9 bucket-pruning DESIGN into measured evidence: every batch's
 # manifest carries its wall time (elapsed_s) and the bytes of committed
-# store data its pruned reads listed (gate_bytes), so the assertions
+# store data its pruned reads listed (read_bytes), so the assertions
 # read the sink's own per-batch records. What must hold as committed
 # batches grow, what must hold: s/batch ~flat (dominant cost ∝ batch,
 # not store) and the gate reads bounded by ONE listing of the
@@ -566,7 +547,7 @@ def _assert_flat(records, budget_total, label):
     import statistics
 
     els = [p["elapsed_s"] for p in records]
-    gbs = [p["gate_bytes"] for p in records]
+    gbs = [p["read_bytes"] for p in records]
     total = sum(els)
     # skip the first two batches (session warm-up + index creation);
     # compare an early window to the final one. MEDIANS for the
@@ -602,7 +583,7 @@ def test_sf1_dedup_ingest_scaling(stress_spark, sf1_dir, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         _dir_bytes,
         foreach_batch_dedup_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     docs = pq.read_table(f"{sf1_dir}/documents.parquet", columns=["doc_id", "text"])
@@ -659,7 +640,7 @@ def test_sf1_dedup_ingest_scaling(stress_spark, sf1_dir, tmp_path):
             "gate bytes grow faster than the sidecar itself — superlinear "
             "re-reading of committed batches"
         )
-        n_acc = read_dedup_accepted(stress_spark, store).count()
+        n_acc = read_ingest_accepted(stress_spark, store).count()
         assert 0 < n_acc <= docs.num_rows
         print(f"  [sf1 stress] dedup_ingest accepted {n_acc}/{docs.num_rows}")
 
@@ -735,7 +716,7 @@ def test_sf1_dedup_ingest_scaling(stress_spark, sf1_dir, tmp_path):
         # convergence at stress scale: every originally-accepted doc
         # survives (the gate skipped it), nothing duplicates, and the
         # re-crawled duplicate chunks mostly reject
-        acc2 = read_dedup_accepted(stress_spark, store2).select("doc_id").collect()
+        acc2 = read_ingest_accepted(stress_spark, store2).select("doc_id").collect()
         ids2 = [r.doc_id for r in acc2]
         assert len(ids2) == len(set(ids2)), "replay duplicated accepted rows"
         n_new_acc = sum(1 for i in ids2 if i >= 10_000_000)
@@ -972,40 +953,34 @@ def test_sf1_semdedup_ingest_scaling(stress_spark, sf1_dir, tmp_path):
     import statistics
 
     els = [p["elapsed_s"] for p in recs]
-    gbs = [p["gate_bytes"] for p in recs]
-    mbs = [p["member_bytes"] for p in recs]
+    rbs = [p["read_bytes"] for p in recs]
     total = sum(els)
     early_t, late_t = statistics.median(els[2:6]), statistics.median(els[-4:])
-    early_g, late_g = sum(gbs[2:6]) / 4, sum(gbs[-4:]) / 4
-    early_m, late_m = sum(mbs[2:6]) / 4, sum(mbs[-4:]) / 4
+    early_r, late_r = sum(rbs[2:6]) / 4, sum(rbs[-4:]) / 4
     print(
         f"\n  [sf1 stress] semdedup_ingest: {len(els)} batches, total "
         f"{total:.1f}s; s/batch early {early_t:.2f} late {late_t:.2f}; "
-        f"gate KB early {early_g/1e3:.0f} late {late_g/1e3:.0f}; "
-        f"member KB early {early_m/1e3:.0f} late {late_m/1e3:.0f}"
+        f"read KB early {early_r/1e3:.0f} late {late_r/1e3:.0f}"
     )
     print(f"  [sf1 stress] semdedup per-batch s: {[round(e,2) for e in els]}")
     assert total < BUDGET_SEMDEDUP_INGEST_S
-    # Cost law, asserted per surface. The id GATE reads id-only
+    # Cost law over the batch's store reads (read_bytes: the id gate,
+    # the member probe and the label fetch). The id GATE reads id-only
     # sidecar bytes of the batch's buckets across committed batches —
     # it accumulates ∝ ids ever committed (same as the dedup/ann
     # sinks, whose sf1 tests print but do not bound it), so it is
     # bounded here by the store-growth ratio, not flatness. The member
     # PROBE likewise grows with store density in the touched cells
     # (the documented Σ|cell|² trade — at fixed k it is ~linear in the
-    # committed store; k ∝ N is the 100 TB mitigation). Neither may be
-    # SUPER-linear — that would mean pruning is broken. Wall time per
+    # committed store; k ∝ N is the 100 TB mitigation). The sum may not
+    # be SUPER-linear — that would mean pruning is broken. Wall time per
     # batch is dominated by fixed plan overhead + the linear member
     # scan; bound it by the same ratio.
     store_ratio = 14 / 4
-    for label, early, late in (
-        ("gate bytes", early_g, late_g),
-        ("member bytes", early_m, late_m),
-    ):
-        assert late <= 2.0 * store_ratio * max(early, 1), (
-            f"{label} grew {early:.0f} -> {late:.0f}: super-linear in the "
-            "committed store — pruning is broken"
-        )
+    assert late_r <= 2.0 * store_ratio * max(early_r, 1), (
+        f"read bytes grew {early_r:.0f} -> {late_r:.0f}: super-linear in the "
+        "committed store — pruning is broken"
+    )
     assert late_t <= max(store_ratio * early_t, early_t + 5.0), (
         f"s/batch grew {early_t:.2f} -> {late_t:.2f}: super-linear in the "
         "committed store"
@@ -1034,7 +1009,7 @@ def test_sf1_decontam_ingest_scaling(stress_spark, sf1_dir, tmp_path):
         _dir_bytes,
         build_decontam_index,
         foreach_batch_decontam_ingest,
-        read_decontam_accepted,
+        read_ingest_accepted,
     )
 
     bench = stress_spark.read.parquet(f"{sf1_dir}/documents.parquet").where(
@@ -1084,7 +1059,7 @@ def test_sf1_decontam_ingest_scaling(stress_spark, sf1_dir, tmp_path):
             "sidecar — the decontam sink has no other store-side read "
             "to blame"
         )
-        n_acc = read_decontam_accepted(stress_spark, store).count()
+        n_acc = read_ingest_accepted(stress_spark, store).count()
         assert 0 < n_acc <= train.num_rows
         print(
             f"  [sf1 stress] decontam_ingest accepted {n_acc}/{train.num_rows}"
@@ -1111,7 +1086,7 @@ def test_sf1_clean_ingest_scaling(stress_spark, sf1_dir, tmp_path):
         _dir_bytes,
         build_decontam_index,
         foreach_batch_clean_ingest,
-        read_clean_accepted,
+        read_ingest_accepted,
     )
 
     bench = stress_spark.read.parquet(f"{sf1_dir}/documents.parquet").where(
@@ -1167,7 +1142,7 @@ def test_sf1_clean_ingest_scaling(stress_spark, sf1_dir, tmp_path):
             p["rejected_quality"] + p["rejected_exact_dup"] + p["rejected_near_dup"]
             for p in recs
         )
-        n_acc = read_clean_accepted(stress_spark, store).count()
+        n_acc = read_ingest_accepted(stress_spark, store).count()
         assert 0 < n_acc <= train.num_rows - tot_rej
         print(f"  [sf1 stress] clean_ingest accepted {n_acc}/{train.num_rows}")
     finally:

@@ -819,7 +819,7 @@ def test_streaming_dedup_ingest_matches_one_shot(spark, tmp_path):
     from distributed_mapreduce_spark.sources import table
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_dedup_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     docs = table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -868,7 +868,7 @@ def test_streaming_dedup_ingest_matches_one_shot(spark, tmp_path):
     try:
         run()
         got = sorted(
-            r.doc_id for r in read_dedup_accepted(spark, store).collect()
+            r.doc_id for r in read_ingest_accepted(spark, store).collect()
         )
         want = sorted(
             r.doc_id
@@ -881,7 +881,7 @@ def test_streaming_dedup_ingest_matches_one_shot(spark, tmp_path):
         n_manifests = len(list(pathlib.Path(store, "_manifests").glob("*.json")))
         run()
         assert (
-            sorted(r.doc_id for r in read_dedup_accepted(spark, store).collect())
+            sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
             == got
         )
         assert (
@@ -913,7 +913,7 @@ def test_streaming_dedup_ingest_matches_one_shot(spark, tmp_path):
             .select("doc_id")
             .collect()
         )
-        got4 = sorted(r.doc_id for r in read_dedup_accepted(spark, store).collect())
+        got4 = sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
         assert got4 == want4
         # the duplicate tail chunk must have been (mostly) rejected
         assert sum(1 for i in got4 if i >= 1000) < len(extra)
@@ -943,7 +943,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         compact_dedup_ingest_store,
         foreach_batch_dedup_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     docs = table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -989,7 +989,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
     s1 = str(tmp_path / "s1")
     try:
         run(s1, str(tmp_path / "ckpt1"))
-        got1 = sorted(r.doc_id for r in read_dedup_accepted(spark, s1).collect())
+        got1 = sorted(r.doc_id for r in read_ingest_accepted(spark, s1).collect())
 
         s2 = str(tmp_path / "s2")
         n = compact_dedup_ingest_store(spark, s1, s2)
@@ -999,7 +999,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
             len(list(pathlib.Path(s2, "_manifests").glob("*.json"))) == 1
         )
         assert sorted(
-            r.doc_id for r in read_dedup_accepted(spark, s2).collect()
+            r.doc_id for r in read_ingest_accepted(spark, s2).collect()
         ) == got1
 
         # fresh checkpoint against the compacted store: full replay of
@@ -1007,7 +1007,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
         extra = [(r.doc_id + 5000, r.text) for r in rows[:25]]
         write_chunk("c3.parquet", extra, base + 10)
         run(s2, str(tmp_path / "ckpt2"))
-        got2 = sorted(r.doc_id for r in read_dedup_accepted(spark, s2).collect())
+        got2 = sorted(r.doc_id for r in read_ingest_accepted(spark, s2).collect())
         assert len(got2) == len(set(got2)), "replay duplicated accepted rows"
 
         widened = docs.where(F.col("doc_id") < rows[-1].doc_id + 1).unionByName(
@@ -1166,7 +1166,7 @@ def test_dedup_ingest_torn_append_replay(spark, tmp_path):
     from distributed_mapreduce_spark.streaming import commitlog
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_dedup_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     docs = table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -1239,7 +1239,7 @@ def test_dedup_ingest_torn_append_replay(spark, tmp_path):
         write_chunk("c3.parquet", rows[2 * third :], base + 10)
         run()
 
-        got = sorted(r.doc_id for r in read_dedup_accepted(spark, store).collect())
+        got = sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
         assert len(got) == len(set(got)), "replay duplicated accepted rows"
         want = sorted(
             r.doc_id
@@ -1934,7 +1934,7 @@ def _cdc_to_changes_cols(df):
 @pytest.mark.full_tier
 def test_ingest_store_time_travel(spark, tmp_path):
     """VERSION AS OF on the ingest-store batch chains (VERDICT r13
-    #6): as_of=k on read_dedup_accepted / ann_ingest_members /
+    #6): as_of=k on read_ingest_accepted / ann_ingest_members /
     ann_ingest_topk reproduces the post-batch-k state exactly at every
     boundary (dedup: ≡ the one-shot keep-first policy over the id
     prefix; ann: ≡ a one-shot IVF store over the prefix), and below a
@@ -1958,7 +1958,7 @@ def test_ingest_store_time_travel(spark, tmp_path):
         compact_dedup_ingest_store,
         foreach_batch_dedup_ingest,
         foreach_batch_ann_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -2012,18 +2012,18 @@ def test_ingest_store_time_travel(spark, tmp_path):
             )
             got = sorted(
                 r.doc_id
-                for r in read_dedup_accepted(spark, dstore, as_of=k).collect()
+                for r in read_ingest_accepted(spark, dstore, as_of=k).collect()
             )
             assert got == want, f"dedup as_of={k}"
         # compaction: below the floor the seed-including fold refuses
         dstore2 = str(tmp_path / "dstore2")
         compact_dedup_ingest_store(spark, dstore, dstore2)
         with pytest.raises(FileNotFoundError, match="history floor"):
-            read_dedup_accepted(spark, dstore2, as_of=1)
+            read_ingest_accepted(spark, dstore2, as_of=1)
         # at/above the floor (source head = batch 2): the seed answers
         assert sorted(
-            r.doc_id for r in read_dedup_accepted(spark, dstore2, as_of=2).collect()
-        ) == sorted(r.doc_id for r in read_dedup_accepted(spark, dstore).collect())
+            r.doc_id for r in read_ingest_accepted(spark, dstore2, as_of=2).collect()
+        ) == sorted(r.doc_id for r in read_ingest_accepted(spark, dstore).collect())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl_name}")
 
@@ -2566,7 +2566,7 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         build_decontam_index,
         foreach_batch_decontam_ingest,
-        read_decontam_accepted,
+        read_ingest_accepted,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -2588,7 +2588,7 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
             ckpt,
             index,
         ).awaitTermination()
-        return read_decontam_accepted(spark, store)
+        return read_ingest_accepted(spark, store)
 
     store = str(tmp_path / "store")
     got = run(store, str(tmp_path / "ckpt"))
@@ -2652,18 +2652,18 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
 
     ms = ManifestStore(store)
     batches = [b for b, _ in ms.manifests()]
-    pre = read_decontam_accepted(spark, store, as_of=batches[0])
+    pre = read_ingest_accepted(spark, store, as_of=batches[0])
     pre_ids = sorted(r.doc_id for r in pre.select("doc_id").collect())
     (ms.man_dir / f"{batches[-1]}.json").unlink()
     visible = sorted(
         r.doc_id
-        for r in read_decontam_accepted(spark, store).select("doc_id").collect()
+        for r in read_ingest_accepted(spark, store).select("doc_id").collect()
     )
     assert set(visible) < set(want)
     got4 = run(store, str(tmp_path / "ckpt4"))
     assert sorted(r.doc_id for r in got4.select("doc_id").collect()) == want
     # as_of prefix unchanged by the replay
-    pre2 = read_decontam_accepted(spark, store, as_of=batches[0])
+    pre2 = read_ingest_accepted(spark, store, as_of=batches[0])
     assert sorted(r.doc_id for r in pre2.select("doc_id").collect()) == pre_ids
 
 
@@ -2707,7 +2707,7 @@ def test_clean_ingest_streamed_equals_batch_composition(spark, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         build_decontam_index,
         foreach_batch_clean_ingest,
-        read_clean_accepted,
+        read_ingest_accepted,
     )
 
     # the zero-blocks assertion below is about THIS sink: start from a
@@ -2747,7 +2747,7 @@ def test_clean_ingest_streamed_equals_batch_composition(spark, tmp_path):
         ).awaitTermination()
         return sorted(
             r.doc_id
-            for r in read_clean_accepted(spark, store).select("doc_id").collect()
+            for r in read_ingest_accepted(spark, store).select("doc_id").collect()
         )
 
     store = str(tmp_path / "store")
@@ -2831,8 +2831,7 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         compact_decontam_ingest_store,
         foreach_batch_clean_ingest,
         foreach_batch_decontam_ingest,
-        read_clean_accepted,
-        read_decontam_accepted,
+        read_ingest_accepted,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -2861,22 +2860,22 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         stream(), store, str(tmp_path / "d_ckpt"), index
     ).awaitTermination()
     want = sorted(
-        r.doc_id for r in read_decontam_accepted(spark, store).collect()
+        r.doc_id for r in read_ingest_accepted(spark, store).collect()
     )
     n = compact_decontam_ingest_store(spark, store, dst)
     assert n == len(want)
     assert len(ManifestStore(dst).manifests()) == 1
-    got = sorted(r.doc_id for r in read_decontam_accepted(spark, dst).collect())
+    got = sorted(r.doc_id for r in read_ingest_accepted(spark, dst).collect())
     assert got == want
     # fresh-checkpoint full replay on the compacted store converges
     foreach_batch_decontam_ingest(
         stream(), dst, str(tmp_path / "d_ckpt2"), index
     ).awaitTermination()
-    got2 = sorted(r.doc_id for r in read_decontam_accepted(spark, dst).collect())
+    got2 = sorted(r.doc_id for r in read_ingest_accepted(spark, dst).collect())
     assert got2 == want
     # history floor: a fold that includes the seed refuses below it
     with _pytest.raises(FileNotFoundError, match="history floor"):
-        read_decontam_accepted(spark, dst, as_of=-1)
+        read_ingest_accepted(spark, dst, as_of=-1)
 
     # ── clean store ───────────────────────────────────────────────
     spark.sql("DROP TABLE IF EXISTS t_compact_corpus_bands")
@@ -2888,12 +2887,12 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         "t_compact_corpus_bands",
         index,
     ).awaitTermination()
-    want = sorted(r.doc_id for r in read_clean_accepted(spark, store).collect())
+    want = sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
     n = compact_clean_ingest_store(spark, store, dst)
     assert n == len(want)
     seed = ManifestStore(dst).manifests()
     assert len(seed) == 1 and seed[0][1]["touched_fp"], seed
-    got = sorted(r.doc_id for r in read_clean_accepted(spark, dst).collect())
+    got = sorted(r.doc_id for r in read_ingest_accepted(spark, dst).collect())
     assert got == want
     foreach_batch_clean_ingest(
         stream(),
@@ -2902,41 +2901,200 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         "t_compact_corpus_bands",
         index,
     ).awaitTermination()
-    got2 = sorted(r.doc_id for r in read_clean_accepted(spark, dst).collect())
+    got2 = sorted(r.doc_id for r in read_ingest_accepted(spark, dst).collect())
     assert got2 == want
 
 
-def test_near_dup_gate_refusal_unpersists_shingles(spark, tmp_path, monkeypatch):
-    """ADVICE r15: on the SUCCESS path the gate hands the persisted
-    batch-shingle frame to its caller (who writes the sidecar and
-    unpersists) — but on a refusal (GREEDY_MAX_PAIRS) or any verify
-    failure the caller's variable is still None, so the gate itself
-    must unpersist before raising; otherwise the cached blocks leak
-    and accumulate across redeliveries of a failing batch."""
-    import pytest
+# ── crash-point matrix: the five manifest-committed ingest sinks ──────
+# Per micro-batch each sink writes its `batch=<id>` dirs and sidecars
+# (and, for dedup and clean, the LSH band index), then commits its
+# manifest. A crash after any of those writes and before the commit
+# must leave a store whose replay from the same checkpoint equals the
+# uncrashed run, and the failed batch must leave no cached block behind
+# (its redeliveries would otherwise accumulate them). The crash is
+# injected by wrapping the writers: sinks._write (every store dir) and
+# the two band-index writers of operators/dedup.
+
+# store writes per batch, in order, before the manifest commit
+_SINK_WRITES = {"dedup": 4, "ann": 2, "semdedup": 2, "decontam": 2, "clean": 5}
+
+
+class _InjectedCrash(RuntimeError):
+    pass
+
+
+@pytest.fixture(scope="module")
+def ingest_feeds(spark, sf_dir, tmp_path_factory):
+    """Two-micro-batch document and vector feeds on the smallest
+    fixture, plus the sinks' static inputs (the decontamination index
+    and a frozen centroid list)."""
+    from pyspark.sql import functions as F
+
+    from distributed_mapreduce_spark.operators.similarity import train_centroids
+    from distributed_mapreduce_spark.queries.pipeline_queries import BENCH_SOURCE
+    from distributed_mapreduce_spark.sources.catalog import table
+    from distributed_mapreduce_spark.streaming.replay import (
+        stage_document_chunks,
+        stage_embedding_chunks,
+    )
+    from distributed_mapreduce_spark.streaming.sinks import build_decontam_index
+
+    sf = sf_dir
+    root = tmp_path_factory.mktemp("crash_feeds")
+    (root / "docs").mkdir()
+    (root / "vecs").mkdir()
+    docs = table(spark, sf, "documents")
+    index = str(root / "index")
+    build_decontam_index(
+        docs.where(F.col("source") == BENCH_SOURCE),
+        index,
+        "t_crash_bench_bands",
+        max_bench_df=50,
+    )
+    yield {
+        "docs": stage_document_chunks(sf, 2, str(root / "docs"), BENCH_SOURCE),
+        "vecs": stage_embedding_chunks(sf, 2, str(root / "vecs")),
+        "index": index,
+        "cents": train_centroids(table(spark, sf, "embeddings"), 8),
+    }
+    spark.sql("DROP TABLE IF EXISTS t_crash_bench_bands")
+
+
+@pytest.fixture(scope="module")
+def uncrashed_runs():
+    """sink -> its uncrashed result, computed by the first cell that
+    needs it and shared by the sink's other cells."""
+    return {}
+
+
+def _run_sink(spark, sink, feeds, store, ckpt, band_table):
+    from distributed_mapreduce_spark.queries.simops import DIM, SEMDEDUP_TAU
+    from distributed_mapreduce_spark.streaming import sinks as S
+
+    def feed(kind, schema):
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feeds[kind])
+        )
+
+    docs = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    vecs = "vec_id bigint, embedding array<float>"
+    start = {
+        "dedup": lambda: S.foreach_batch_dedup_ingest(
+            feed("docs", docs), store, ckpt, band_table
+        ),
+        "ann": lambda: S.foreach_batch_ann_ingest(
+            feed("vecs", vecs), store, ckpt, feeds["cents"]
+        ),
+        "semdedup": lambda: S.foreach_batch_semdedup_ingest(
+            feed("vecs", vecs), store, ckpt, [v for _, v in feeds["cents"]],
+            DIM, tau=SEMDEDUP_TAU,
+        ),
+        "decontam": lambda: S.foreach_batch_decontam_ingest(
+            feed("docs", docs), store, ckpt, feeds["index"]
+        ),
+        "clean": lambda: S.foreach_batch_clean_ingest(
+            feed("docs", docs), store, ckpt, band_table, feeds["index"]
+        ),
+    }
+    start[sink]().awaitTermination()
+
+
+def _read_sink(spark, sink, store):
+    from distributed_mapreduce_spark.streaming import sinks as S
+
+    read = {
+        "ann": S.ann_ingest_members,
+        "semdedup": S.read_semdedup_representatives,
+    }.get(sink, S.read_ingest_accepted)
+    return sorted(read(spark, store).collect())
+
+
+def _arm_crash(monkeypatch, after_write):
+    """Fail batch 1 of the next run right after its `after_write`-th
+    store write (batch 0 commits normally)."""
+    import distributed_mapreduce_spark.operators.dedup as dedup_mod
+    from distributed_mapreduce_spark.streaming import sinks as S
+    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
+
+    state = {"commits": 0, "writes": 0}
+    commit = ManifestStore.commit
+
+    def counting_commit(self, batch_id, payload):
+        commit(self, batch_id, payload)
+        state["commits"] += 1
+
+    def crashing(write):
+        def wrapped(*args, **kwargs):
+            out = write(*args, **kwargs)
+            if state["commits"] == 1:
+                state["writes"] += 1
+                if state["writes"] == after_write:
+                    raise _InjectedCrash(f"crash after store write {after_write}")
+            return out
+
+        return wrapped
+
+    monkeypatch.setattr(ManifestStore, "commit", counting_commit)
+    monkeypatch.setattr(S, "_write", crashing(S._write))
+    for name in ("append_lsh_band_index", "write_lsh_band_index"):
+        monkeypatch.setattr(dedup_mod, name, crashing(getattr(dedup_mod, name)))
+
+
+_CRASH_CELLS = [
+    pytest.param(
+        sink, k, marks=() if k == n else pytest.mark.full_tier, id=f"{sink}-write{k}"
+    )
+    for sink, n in _SINK_WRITES.items()
+    for k in range(1, n + 1)
+] + [
+    # the near-dup gate's GREEDY_MAX_PAIRS refusal (ADVICE r15) on both
+    # sinks that run it: it raises before any write of the batch
+    pytest.param("dedup", "refusal", id="dedup-refusal"),
+    pytest.param("clean", "refusal", marks=pytest.mark.full_tier, id="clean-refusal"),
+]
+
+
+@pytest.mark.parametrize("sink,crash", _CRASH_CELLS)
+def test_ingest_sink_crash_matrix(
+    spark, tmp_path, monkeypatch, ingest_feeds, uncrashed_runs, sink, crash
+):
+    """A batch that fails after store write k (or at the near-dup
+    refusal) and before its manifest commit: the failure surfaces, the
+    persistent-RDD set is what it was before the run (the skeleton's
+    release scope covers the failing batch), and the replay from the
+    same checkpoint equals the uncrashed run."""
+    from pyspark.errors import StreamingQueryException
 
     import distributed_mapreduce_spark.operators.dedup as dedup_mod
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-    from distributed_mapreduce_spark.streaming.sinks import _near_dup_gate
+    from distributed_mapreduce_spark.caching import persistent_rdd_ids
 
-    def persistent():
-        return set(
-            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-        )
+    if sink not in uncrashed_runs:
+        ref = str(tmp_path / "ref")
+        try:
+            _run_sink(spark, sink, ingest_feeds, ref, ref + "_ckpt", "t_crash_ref")
+        finally:
+            spark.sql("DROP TABLE IF EXISTS t_crash_ref")
+        uncrashed_runs[sink] = _read_sink(spark, sink, ref)
 
-    before = persistent()
-    txt = "the quick brown fox jumps over the lazy dog " * 4
-    batch = spark.createDataFrame(
-        [(1, txt), (2, txt)], "doc_id bigint, text string"
-    )
-    ms = ManifestStore(str(tmp_path / "store"))
-    monkeypatch.setattr(dedup_mod, "GREEDY_MAX_PAIRS", 0)
-    with pytest.raises(ValueError, match="GREEDY_MAX_PAIRS"):
-        _near_dup_gate(
-            spark, ms, [], batch, "no_such_band_table_r15", 0.5, 32, 16,
-            64, "doc_id", "text",
-        )
-    assert persistent() == before
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    try:
+        before = persistent_rdd_ids(spark)
+        if crash == "refusal":
+            monkeypatch.setattr(dedup_mod, "GREEDY_MAX_PAIRS", 0)
+            match = "GREEDY_MAX_PAIRS"
+        else:
+            _arm_crash(monkeypatch, crash)
+            match = f"crash after store write {crash}"
+        with pytest.raises(StreamingQueryException, match=match):
+            _run_sink(spark, sink, ingest_feeds, store, ckpt, "t_crash_bands")
+        assert persistent_rdd_ids(spark) == before
+        monkeypatch.undo()
+        _run_sink(spark, sink, ingest_feeds, store, ckpt, "t_crash_bands")
+        assert _read_sink(spark, sink, store) == uncrashed_runs[sink]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_crash_bands")
 
 
 def test_decontam_id_collision_across_corpora(spark, tmp_path):
