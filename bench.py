@@ -459,6 +459,7 @@ def main() -> int:
         print(f"unknown tier {tier!r} (registered|shadow)", file=sys.stderr)
         return 2
 
+    from distributed_mapreduce_spark.caching import cache_scope
     from distributed_mapreduce_spark.registry import all_queries, shadow_queries
     from distributed_mapreduce_spark.session import get_spark
 
@@ -526,10 +527,10 @@ def main() -> int:
     for name in sorted(queries):
         if name.startswith("st_"):
             try:
-                force(queries[name](spark, sf_dir))
+                with cache_scope(spark):
+                    force(queries[name](spark, sf_dir))
             except Exception as exc:  # pragma: no cover
                 print(f"  (st warmup {name} skipped: {exc})", file=sys.stderr)
-    spark.catalog.clearCache()
 
     # Per-query time = min over SPARK_GRAFT_BENCH_RUNS executions
     # (default 3). This box shares hardware with unpredictable external
@@ -568,10 +569,12 @@ def main() -> int:
             else _calibration_probe()
         )
         for name in sorted(queries):
-            t0 = time.perf_counter()
-            force(queries[name](spark, sf_dir))
-            samples[name].append(time.perf_counter() - t0)
-            # Per-QUERY storage hygiene (was per-pass until r7):
+            with cache_scope(spark):
+                t0 = time.perf_counter()
+                force(queries[name](spark, sf_dir))
+                samples[name].append(time.perf_counter() - t0)
+            # Per-QUERY storage hygiene (was per-pass until r7), released
+            # by the scope's exit, outside the timed span:
             # operators that persist() intermediates (jaccard/minhash/
             # simhash/contam/kmeans) and iterative operators that
             # localCheckpoint (CC, PageRank, BPE — RDD-level storage
@@ -585,11 +588,6 @@ def main() -> int:
             # every pass). Each query is independent, so each timed
             # sample now runs against a clean storage state — the
             # same state its floor was recorded against.
-            spark.catalog.clearCache()
-            for jrdd in list(
-                spark.sparkContext._jsc.getPersistentRDDs().values()
-            ):
-                jrdd.unpersist(False)
         # Re-probe AFTER the pass and OR it into the quietness label: a
         # tenant that arrived mid-pass inflates the samples even though
         # the pre-pass probe was quiet, and quiet_floor.py's merge
@@ -680,7 +678,7 @@ def main() -> int:
         # and cross-round judges see warm-up trajectories and which
         # pass the min came from, without re-running.
         "samples": {n: [round(s, 3) for s in v] for n, v in sorted(samples.items())},
-        "methodology": "min over cold interleaved passes (clearCache + orphan-RDD unpersist after every query); load-gated passes (ext_busy_cores threshold %.1f); fixed-work calibration probes bracket each pass (loud if >%.2fx floors-file baseline at both ends)"
+        "methodology": "min over cold interleaved passes (cache_scope release after every query); load-gated passes (ext_busy_cores threshold %.1f); fixed-work calibration probes bracket each pass (loud if >%.2fx floors-file baseline at both ends)"
         % (threshold, _CALIB_RATIO),
     }
     print(json.dumps(full))

@@ -1,115 +1,90 @@
-"""Operator-scope cache lifecycle (VERDICT r13 #5).
+"""Scoped lifetime for cached and checkpointed blocks.
 
-Several batch operators persist() a shared subtree their returned lazy
-DataFrame reads more than once (the cache-the-training-set idiom of
-iterative ML, or the shingle pass feeding signatures + verify + sizes
-in the dedup tier). The operator cannot unpersist before returning —
-the caller's action is what consumes the cache — but without a release
-path a long-lived session composing several operators accumulates
-storage blocks indefinitely (the bench harness masks this with a
-per-query clearCache, which a real session doesn't run).
+Several operators and query builders persist a subtree that the lazy
+DataFrame they return reads more than once (the training set of an
+iterative ML fold, the shingle pass feeding signatures + verify +
+sizes in the dedup tier), or localCheckpoint an iteration's state to
+truncate its lineage. They cannot free those blocks before returning:
+the caller's action is what consumes them. The caller owns their
+lifetime instead, with one scope around the build and the action:
 
-The contract here makes the lifetime explicit and releasable:
+    with cache_scope(spark):
+        rows = query(spark, sf_dir).collect()
 
-- an operator calls ``attach_caches(result, cached_a, cached_b, ...)``
-  on the frame it returns, annotating it with every persisted
-  DataFrame its plan reads (attachments PROPAGATE: passing a frame
-  that itself carries attachments forwards them, so compositions keep
-  the full set);
-- the caller materializes the result (action of its choice), then
-  calls ``release_caches(result)`` — every attached cache unpersists
-  and the annotation clears. Releasing before the action is safe but
-  forfeits the sharing (Spark recomputes; results are unchanged).
+Every frame persisted through :func:`persist` and every RDD created by
+:func:`local_checkpoint` while a scope is active registers in the
+innermost one. The active scope lives in a ``contextvars.ContextVar``,
+so it is per thread: a foreachBatch callback opens its own. On exit,
+normal or by exception, the scope unpersists exactly what registered
+in it and nothing else. With no active scope the helpers only persist
+or checkpoint, and nothing releases the blocks.
 
-SURVIVAL RULE (VERDICT r14 watch item #2): the annotation lives as a
-Python attribute on the EXACT DataFrame object the operator returned.
-Deriving a new frame — ``annotated.select(...)``, ``.where(...)``,
-``.join(...)`` — produces a FRESH object with no annotation: releasing
-the derived frame is a no-op and the caches leak until the session's
-cache is cleared wholesale. Composition code must either release the
-ORIGINAL annotated frame once the derived result is consumed, or
-forward the annotation explicitly with
-``attach_caches(derived, annotated)`` (which also forwards checkpoint
-RDD ids). The annotation also holds strong Python references to every
-attached frame, so an annotated result that is never released keeps
-those objects alive for its own lifetime — by design, since the JVM
-cache they pin was already leaked without a release path.
-
-The manifest-committed ingest sinks don't need this: their per-batch
-persists and checkpoints are consumed inside the foreachBatch function
-and freed by one per-batch release scope (streaming/sinks._IngestBatch,
-released in ``finally`` by the shared _gated_ingest skeleton).
+A localCheckpoint truncates lineage: once its scope exits, no frame
+built over the checkpoint can be queried again. Consume a result
+inside the scope that built it. Iterative operators free a superseded
+checkpoint generation early with :func:`unpersist_rdd_ids` on the ids
+:func:`local_checkpoint` returned.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator
+
 from pyspark.sql import DataFrame
 
-_ATTR = "_dmr_caches"
-_RDD_ATTR = "_dmr_rdd_ids"
+# innermost active scope: (persisted frames, checkpoint RDD ids)
+_ACTIVE: ContextVar[tuple[list, set] | None] = ContextVar(
+    "dmr_cache_scope", default=None
+)
 
 
-def attach_caches(result: DataFrame, *sources: DataFrame) -> DataFrame:
-    """Annotate `result` with the persisted DataFrames its plan reads.
-
-    Each source contributes itself if it is persisted, plus anything
-    already attached to it (composition). Duplicates (by object
-    identity) collapse so release never double-unpersists."""
-    seen: dict[int, DataFrame] = {
-        id(c): c for c in getattr(result, _ATTR, ())
-    }
-    for s in sources:
-        for c in getattr(s, _ATTR, ()):
-            seen.setdefault(id(c), c)
-        lvl = s.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            seen.setdefault(id(s), s)
-        spark_ids = getattr(s, _RDD_ATTR, None)
-        if spark_ids is not None and spark_ids[1]:
-            attach_rdd_ids(result, spark_ids[0], spark_ids[1])
-    setattr(result, _ATTR, tuple(seen.values()))
-    return result
+@contextmanager
+def cache_scope(spark) -> Iterator[None]:
+    """Release every frame and checkpoint registered inside the block
+    when it exits, on success and on exception alike. Scopes nest: a
+    helper registers in the innermost one only."""
+    frames: list = []
+    rdd_ids: set = set()
+    token = _ACTIVE.set((frames, rdd_ids))
+    try:
+        yield
+    finally:
+        _ACTIVE.reset(token)
+        for df in frames:
+            df.unpersist()
+        unpersist_rdd_ids(spark, rdd_ids)
 
 
-def release_caches(result: DataFrame, blocking: bool = False) -> DataFrame:
-    """Unpersist every cache attached to `result` (no-op for frames
-    with none) and clear the annotations. Call after the action that
-    materializes the result; idempotent.
-
-    CAVEAT for checkpoint-backed results (attach_rdd_ids): cached
-    plans recompute safely after release, but a localCheckpoint
-    truncates lineage — once its blocks are released, the frame they
-    backed CANNOT be queried again. Release only when done with it."""
-    for c in getattr(result, _ATTR, ()):
-        c.unpersist(blocking)
-    if hasattr(result, _ATTR):
-        setattr(result, _ATTR, ())
-    spark_ids = getattr(result, _RDD_ATTR, None)
-    if spark_ids is not None:
-        spark, ids = spark_ids
-        unpersist_rdd_ids(spark, ids, blocking)
-        setattr(result, _RDD_ATTR, (spark, frozenset()))
-    return result
+def persist(df: DataFrame) -> DataFrame:
+    """`df.persist()`, registered in the active scope if there is one."""
+    df = df.persist()
+    scope = _ACTIVE.get()
+    if scope is not None:
+        scope[0].append(df)
+    return df
 
 
-# ── localCheckpoint blocks (no CacheManager entry) ───────────────────
-# DataFrame.localCheckpoint persists its materialized RDD directly;
-# the blocks never appear in the SQL cache, so DataFrame.unpersist
-# cannot reach them (the "orphan RDD" class of ADVICE r9 — bench.py
-# sweeps them between queries via getPersistentRDDs). Operators that
-# checkpoint (connected_components, pagerank) track the RDD ids they
-# created and either release superseded iterations eagerly in-loop or
-# attach the survivors to the result for release_caches.
+def local_checkpoint(df: DataFrame) -> tuple[DataFrame, frozenset]:
+    """Eager `df.localCheckpoint()` plus the ids of the RDDs it
+    persisted, registered in the active scope if there is one.
+
+    The blocks have no CacheManager entry, so `DataFrame.unpersist`
+    cannot reach them; the ids come from a persistent-RDD diff taken
+    around this one call."""
+    spark = df.sparkSession
+    before = persistent_rdd_ids(spark)
+    df = df.localCheckpoint(eager=True)
+    ids = persistent_rdd_ids(spark) - before
+    scope = _ACTIVE.get()
+    if scope is not None:
+        scope[1].update(ids)
+    return df, ids
 
 
 def persistent_rdd_ids(spark) -> frozenset:
-    """Ids of every currently persisted RDD (JVM registry) — snapshot
-    before a localCheckpoint, diff after, to learn which blocks a
-    specific checkpoint created. The diff assumes no OTHER driver
-    thread is creating persistent RDDs in the same window (true for
-    this repo's batch operators and for the ingest sinks' per-batch
-    release scope, streaming/sinks._IngestBatch, which diffs the same
-    way to free the batch's checkpoint blocks)."""
+    """Ids of every currently persisted RDD (JVM registry)."""
     return frozenset(
         spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     )
@@ -117,19 +92,9 @@ def persistent_rdd_ids(spark) -> frozenset:
 
 def unpersist_rdd_ids(spark, ids, blocking: bool = False) -> None:
     """Unpersist the given RDD ids if still registered (idempotent —
-    ids already swept by a clearCache/orphan pass are skipped)."""
+    ids already released are skipped)."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for i in ids:
         jrdd = jmap.get(i)
         if jrdd is not None:
             jrdd.unpersist(blocking)
-
-
-def attach_rdd_ids(result: DataFrame, spark, ids) -> DataFrame:
-    """Annotate `result` with checkpoint RDD ids release_caches should
-    free. See the release_caches caveat: unlike cached plans, a
-    released checkpoint-backed frame is not re-queryable."""
-    prev = getattr(result, _RDD_ATTR, None)
-    merged = frozenset(ids) | (prev[1] if prev is not None else frozenset())
-    setattr(result, _RDD_ATTR, (spark, merged))
-    return result

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
 from distributed_mapreduce_spark.functions.text import tokens
 
 # Truncate iteration lineage every K merge rounds: each round stacks a
@@ -57,6 +58,32 @@ def word_types(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _pair_counts(vocab: DataFrame) -> DataFrame:
+    """(left, right, pair_count): adjacent symbol pairs of every word
+    type, weighted by the word's corpus frequency."""
+    return (
+        vocab.select(
+            "freq",
+            F.explode(
+                F.arrays_zip(
+                    F.slice("symbols", 1, F.size("symbols") - 1).alias("l"),
+                    F.slice("symbols", 2, F.size("symbols") - 1).alias("r"),
+                )
+            ).alias("p"),
+        )
+        .groupBy(F.col("p.l").alias("left"), F.col("p.r").alias("right"))
+        .agg(F.sum("freq").alias("pair_count"))
+    )
+
+
+def _checkpoint(vocab: DataFrame, ids: frozenset) -> tuple[DataFrame, frozenset]:
+    """Checkpoint the next vocab generation (eager), then free the
+    generation it supersedes."""
+    nxt, nxt_ids = caching.local_checkpoint(vocab)
+    caching.unpersist_rdd_ids(vocab.sparkSession, ids)
+    return nxt, nxt_ids
+
+
 def _merge_symbols(symbols: list[str], left: str, right: str) -> list[str]:
     """Leftmost-first non-overlapping merge of (left, right) → left+right."""
     out: list[str] = []
@@ -78,55 +105,43 @@ def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text") -> list[di
     per merge — the artifact a tokenizer ships)."""
     import pandas as pd
 
-    spark = docs.sparkSession
-    vocab = word_types(docs, text_col).localCheckpoint()
-    merges: list[dict] = []
-    for rank in range(n_merges):
-        pairs = (
-            vocab.select(
-                "freq",
-                F.explode(
-                    F.arrays_zip(
-                        F.slice("symbols", 1, F.size("symbols") - 1).alias("l"),
-                        F.slice("symbols", 2, F.size("symbols") - 1).alias("r"),
-                    )
-                ).alias("p"),
+    with caching.cache_scope(docs.sparkSession):
+        vocab, ids = caching.local_checkpoint(word_types(docs, text_col))
+        merges: list[dict] = []
+        for rank in range(n_merges):
+            pairs = _pair_counts(vocab)
+            # deterministic argmax: highest count, then lexicographic pair —
+            # a bounded 1-row collect (the driver never sees the vocabulary)
+            top = pairs.orderBy(
+                F.desc("pair_count"), F.asc("left"), F.asc("right")
+            ).first()
+            if top is None or top.pair_count is None:
+                break
+            left, right = top.left, top.right
+            merges.append(
+                {
+                    "rank": rank,
+                    "left": left,
+                    "right": right,
+                    "pair_count": int(top.pair_count),
+                }
             )
-            .groupBy(F.col("p.l").alias("left"), F.col("p.r").alias("right"))
-            .agg(F.sum("freq").alias("pair_count"))
-        )
-        # deterministic argmax: highest count, then lexicographic pair —
-        # a bounded 1-row collect (the driver never sees the vocabulary)
-        top = pairs.orderBy(
-            F.desc("pair_count"), F.asc("left"), F.asc("right")
-        ).first()
-        if top is None or top.pair_count is None:
-            break
-        left, right = top.left, top.right
-        merges.append(
-            {
-                "rank": rank,
-                "left": left,
-                "right": right,
-                "pair_count": int(top.pair_count),
-            }
-        )
 
-        def apply(batches, left=left, right=right):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "symbols": [
-                            _merge_symbols(list(s), left, right)
-                            for s in pdf["symbols"]
-                        ],
-                        "freq": pdf["freq"],
-                    }
-                )
+            def apply(batches, left=left, right=right):
+                for pdf in batches:
+                    yield pd.DataFrame(
+                        {
+                            "symbols": [
+                                _merge_symbols(list(s), left, right)
+                                for s in pdf["symbols"]
+                            ],
+                            "freq": pdf["freq"],
+                        }
+                    )
 
-        vocab = vocab.mapInPandas(apply, schema="symbols array<string>, freq bigint")
-        if (rank + 1) % CHECKPOINT_EVERY == 0:
-            vocab = vocab.localCheckpoint()
+            vocab = vocab.mapInPandas(apply, schema="symbols array<string>, freq bigint")
+            if (rank + 1) % CHECKPOINT_EVERY == 0:
+                vocab, ids = _checkpoint(vocab, ids)
     return merges
 
 
@@ -197,61 +212,50 @@ def bpe_train_batched(
     word-TYPE table. Rounds ≈ n_merges / batch_size."""
     import pandas as pd
 
-    vocab = word_types(docs, text_col).localCheckpoint()
-    merges: list[dict] = []
-    rounds = 0
-    while len(merges) < n_merges:
-        pairs = (
-            vocab.select(
-                "freq",
-                F.explode(
-                    F.arrays_zip(
-                        F.slice("symbols", 1, F.size("symbols") - 1).alias("l"),
-                        F.slice("symbols", 2, F.size("symbols") - 1).alias("r"),
-                    )
-                ).alias("p"),
+    with caching.cache_scope(docs.sparkSession):
+        vocab, ids = caching.local_checkpoint(word_types(docs, text_col))
+        merges: list[dict] = []
+        rounds = 0
+        while len(merges) < n_merges:
+            pairs = _pair_counts(vocab)
+            m = min(batch_size, n_merges - len(merges))
+            # bounded collect: enough candidates that the disjointness
+            # filter usually fills the batch; worst case the round applies
+            # fewer merges (never wrong, just an extra round).
+            top = (
+                pairs.orderBy(F.desc("pair_count"), F.asc("left"), F.asc("right"))
+                .limit(max(4 * m, 16))
+                .collect()
             )
-            .groupBy(F.col("p.l").alias("left"), F.col("p.r").alias("right"))
-            .agg(F.sum("freq").alias("pair_count"))
-        )
-        m = min(batch_size, n_merges - len(merges))
-        # bounded collect: enough candidates that the disjointness
-        # filter usually fills the batch; worst case the round applies
-        # fewer merges (never wrong, just an extra round).
-        top = (
-            pairs.orderBy(F.desc("pair_count"), F.asc("left"), F.asc("right"))
-            .limit(max(4 * m, 16))
-            .collect()
-        )
-        if not top or top[0].pair_count is None:
-            break
-        chosen = _select_disjoint(
-            [(r.left, r.right, int(r.pair_count)) for r in top], m
-        )
-        for left, right, c in chosen:
-            merges.append(
-                {
-                    "rank": len(merges),
-                    "left": left,
-                    "right": right,
-                    "pair_count": c,
-                }
+            if not top or top[0].pair_count is None:
+                break
+            chosen = _select_disjoint(
+                [(r.left, r.right, int(r.pair_count)) for r in top], m
             )
+            for left, right, c in chosen:
+                merges.append(
+                    {
+                        "rank": len(merges),
+                        "left": left,
+                        "right": right,
+                        "pair_count": c,
+                    }
+                )
 
-        def apply(batches, chosen=tuple(chosen)):
-            for pdf in batches:
-                out = []
-                for s in pdf["symbols"]:
-                    syms = list(s)
-                    for left, right, _ in chosen:
-                        syms = _merge_symbols(syms, left, right)
-                    out.append(syms)
-                yield pd.DataFrame({"symbols": out, "freq": pdf["freq"]})
+            def apply(batches, chosen=tuple(chosen)):
+                for pdf in batches:
+                    out = []
+                    for s in pdf["symbols"]:
+                        syms = list(s)
+                        for left, right, _ in chosen:
+                            syms = _merge_symbols(syms, left, right)
+                        out.append(syms)
+                    yield pd.DataFrame({"symbols": out, "freq": pdf["freq"]})
 
-        vocab = vocab.mapInPandas(apply, schema="symbols array<string>, freq bigint")
-        rounds += 1
-        if rounds % CHECKPOINT_EVERY == 0:
-            vocab = vocab.localCheckpoint()
+            vocab = vocab.mapInPandas(apply, schema="symbols array<string>, freq bigint")
+            rounds += 1
+            if rounds % CHECKPOINT_EVERY == 0:
+                vocab, ids = _checkpoint(vocab, ids)
     return merges
 
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
+
 MAX_ITERS = 25
 
 # Edge-count bound for the driver-side union-find shortcut. Measured
@@ -91,18 +93,12 @@ def connected_components(
     # both directions, so symmetrization — an extra 2× checkpoint
     # write — is deferred to the distributed branch that actually
     # iterates over it (shadow floor pass r7).
-    from distributed_mapreduce_spark.caching import (
-        attach_rdd_ids,
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
+    one, one_ids = caching.local_checkpoint(
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
     )
-
-    before = persistent_rdd_ids(spark)
-    one = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("a"),
-        F.greatest(F.col(src), F.col(dst)).alias("b"),
-    ).localCheckpoint()
-    one_ids = persistent_rdd_ids(spark) - before
     if one.count() <= driver_max_edges:
         # Arrow collect (toArrow), not collect(): Row objects cost
         # ~100+ bytes each, an Arrow table ~16 bytes/edge — the
@@ -117,25 +113,25 @@ def connected_components(
         # the collect fully consumed the edge checkpoint; the result is
         # driver-built and independent of it — free the blocks now
         # (VERDICT r13 #5: no net persisted blocks after the operator)
-        unpersist_rdd_ids(spark, one_ids)
+        caching.unpersist_rdd_ids(spark, one_ids)
         return spark.createDataFrame(rows, "id bigint, component bigint")
     # ── distributed branch: alternating large-star/small-star ──────
     # Invariants maintained on `cur` (the working edge list): distinct
     # (a, b) rows with a < b (self-loops handled at the end — they only
     # seed isolated nodes). Every node of the original graph appears in
     # `nodes`, so the final star join-back labels all of them.
-    before = persistent_rdd_ids(spark)
-    nodes = (
+    nodes, node_ids = caching.local_checkpoint(
         one.select(F.col("a").alias("id"))
         .unionByName(one.select(F.col("b").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
-    node_ids = persistent_rdd_ids(spark) - before
-    before = persistent_rdd_ids(spark)
-    cur = one.where(F.col("a") != F.col("b")).distinct().localCheckpoint()
-    cur_ids = persistent_rdd_ids(spark) - before
+    cur, cur_ids = caching.local_checkpoint(
+        one.where(F.col("a") != F.col("b")).distinct()
+    )
     n_cur = cur.count()
+    # both eager checkpoints above have materialized: nothing reads
+    # the raw edge list any more
+    caching.unpersist_rdd_ids(spark, one_ids)
     for _ in range(max_iters):
         if n_cur == 0:
             break
@@ -159,8 +155,7 @@ def connected_components(
         # N(u) = smaller neighbors, m(u) = min(N(u)) (< u always);
         # every v ∈ N(u) ∪ {u} re-attaches to m(u).
         sm = ls.groupBy(F.col("b").alias("u")).agg(F.min("a").alias("m"))
-        before = persistent_rdd_ids(spark)
-        nxt = (
+        nxt, new_ids = caching.local_checkpoint(
             ls.join(sm, ls.b == sm.u)
             .select(F.col("m").alias("na"), F.col("a").alias("nb"))
             .unionByName(sm.select(F.col("m").alias("na"), F.col("u").alias("nb")))
@@ -169,9 +164,7 @@ def connected_components(
             )
             .where(F.col("a") != F.col("b"))
             .distinct()
-            .localCheckpoint()
         )
-        new_ids = persistent_rdd_ids(spark) - before
         # Convergence: the edge set is a fixed point (stars only). The
         # driver sees two scalars — the new count and a limit(1) probe
         # of set difference — never edge data.
@@ -182,7 +175,7 @@ def connected_components(
         # the new checkpoint is materialized (the count above) and
         # supersedes the previous edge generation — releasing in-loop
         # keeps the footprint at one generation (VERDICT r13 #5)
-        unpersist_rdd_ids(spark, cur_ids)
+        caching.unpersist_rdd_ids(spark, cur_ids)
         cur_ids = new_ids
         cur, n_cur = nxt, n_nxt
         if changed == 0:
@@ -193,21 +186,17 @@ def connected_components(
     # is a no-op on a converged star set (each leaf has exactly one
     # root) — it exists so a max_iters truncation can degrade only to
     # approximate labels, never to duplicated output rows.
-    before = persistent_rdd_ids(spark)
     roots = cur.groupBy(F.col("b").alias("id")).agg(F.min("a").alias("r"))
-    labels = (
-        nodes.join(roots, "id", "left")
-        .select("id", F.coalesce("r", F.col("id")).alias("component"))
-        .localCheckpoint()
+    labels, _ = caching.local_checkpoint(
+        nodes.join(roots, "id", "left").select(
+            "id", F.coalesce("r", F.col("id")).alias("component")
+        )
     )
-    label_ids = persistent_rdd_ids(spark) - before
     # the final label checkpoint is self-contained (lineage truncated):
-    # the edge/node checkpoints are dead once it materializes — free now
-    labels.count()
-    unpersist_rdd_ids(spark, one_ids | cur_ids | node_ids)
-    # survivor: the final label checkpoint — the returned frame IS its
-    # blocks; release via caching.release_caches once consumed.
-    return attach_rdd_ids(labels, spark, label_ids)
+    # the edge/node checkpoints are dead once it materializes — free
+    # now; the label blocks themselves belong to the caller's scope
+    caching.unpersist_rdd_ids(spark, cur_ids | node_ids)
+    return labels
 
 
 PR_DAMPING = 0.85
@@ -246,23 +235,15 @@ def pagerank(
     # join, the expensive part of every near-dup graph — re-executes
     # for deg AND once per iteration (measured on dedup_q13: 4
     # executions of the jaccard pair join for 3 rounds).
-    from distributed_mapreduce_spark.caching import (
-        attach_rdd_ids,
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
-    )
-
     spark = edges.sparkSession
-    before = persistent_rdd_ids(spark)
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .localCheckpoint()
+    und, raw_und_ids = caching.local_checkpoint(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionAll(
+            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+        )
     )
-    raw_und_ids = persistent_rdd_ids(spark) - before
-    before = persistent_rdd_ids(spark)
-    deg = und.groupBy("u").agg(F.count("*").alias("deg")).localCheckpoint()
-    deg_ids = persistent_rdd_ids(spark) - before
+    deg, deg_ids = caching.local_checkpoint(
+        und.groupBy("u").agg(F.count("*").alias("deg"))
+    )
     n = deg.count()
     # Fold the STATIC deg table into the edge list once, partitioned on
     # the join key: deg never changes across rounds, so joining it
@@ -272,12 +253,10 @@ def pagerank(
     # rank table — the side that actually changed. Same arithmetic,
     # same rounding, bit-identical ranks (the DuckDB oracle replay is
     # unchanged).
-    before = persistent_rdd_ids(spark)
-    und = und.join(deg, "u").repartition("u").localCheckpoint()
-    und_ids = persistent_rdd_ids(spark) - before
+    und, und_ids = caching.local_checkpoint(und.join(deg, "u").repartition("u"))
     # the folded (u, v, deg) checkpoint supersedes the raw edge list —
     # free the raw blocks now (the CC in-loop release discipline)
-    unpersist_rdd_ids(spark, raw_und_ids)
+    caching.unpersist_rdd_ids(spark, raw_und_ids)
     r = deg.select(F.col("u").alias("id"), F.lit(1.0 / n).alias("r"))
     r_ids: frozenset = frozenset()
     base = (1.0 - damping) / n
@@ -293,8 +272,7 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        before = persistent_rdd_ids(spark)
-        r = (
+        r, new_ids = caching.local_checkpoint(
             deg.select(F.col("u").alias("id"))
             .join(contrib, "id", "left")
             .select(
@@ -306,25 +284,15 @@ def pagerank(
                     12,
                 ).alias("r"),
             )
-            .localCheckpoint()
         )
-        new_ids = persistent_rdd_ids(spark) - before
-        # eager=True default: the checkpoint above is materialized, so
-        # the previous round's rank blocks are superseded — free them
-        unpersist_rdd_ids(spark, r_ids)
+        # the checkpoint above is materialized (eager), so the previous
+        # round's rank blocks are superseded — free them
+        caching.unpersist_rdd_ids(spark, r_ids)
         r_ids = new_ids
-    if r_ids:
-        # the final rank checkpoint is self-contained (eager, lineage
-        # truncated): the edge and deg checkpoints are dead — free now
-        unpersist_rdd_ids(spark, und_ids | deg_ids)
-        survivors = r_ids
-    else:
-        # iters=0: r is still a lazy projection OVER the deg
-        # checkpoint — releasing deg here would truncate the lineage
-        # out from under the returned frame (r14 self-review)
-        unpersist_rdd_ids(spark, und_ids)
-        survivors = deg_ids
-    # survivor: the final rank checkpoint (or, at iters=0, the deg
-    # checkpoint the lazy r still reads) — release via
-    # caching.release_caches once the result is consumed.
-    return attach_rdd_ids(r.select("id", F.col("r").alias("pr")), spark, survivors)
+    # the final rank checkpoint is self-contained (eager, lineage
+    # truncated): the edge and deg checkpoints are dead — free now.
+    # At iters=0, r is still a lazy projection OVER the deg checkpoint,
+    # so deg stays (r14 self-review). The survivor belongs to the
+    # caller's scope.
+    caching.unpersist_rdd_ids(spark, (und_ids | deg_ids) if r_ids else und_ids)
+    return r.select("id", F.col("r").alias("pr"))

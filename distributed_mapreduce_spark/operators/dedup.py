@@ -31,6 +31,7 @@ import operator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
 from distributed_mapreduce_spark.functions.text import (
     fingerprint,
     shingles,
@@ -128,22 +129,15 @@ def doc_shingles(
         # replaces two of each; the guard itself reads the cache. At
         # 100 TB this intermediate is the stage a pipeline checkpoints
         # (same argument as the post-guard persist in jaccard_pairs).
-        # Cache lifetime: attached to the returned frame (caching.py
-        # convention) — composed operators forward it to their results.
         # Footprint note (ADVICE r16): callers that ALSO persist the
         # returned anti-joined frame (jaccard_pairs,
         # minhash_near_dup_pairs) hold two near-identical cached copies
-        # of the shingle table for the query's lifetime — deliberate
-        # (the guard subtree and the 3 downstream readers each avoid a
-        # recompute), but long-lived sessions must release_caches the
-        # composed result (or clearCache) or both copies stay resident.
-        from distributed_mapreduce_spark.caching import attach_caches
-
-        sh = sh.persist()
+        # of the shingle table until the caller's caching.cache_scope
+        # exits — deliberate (the guard subtree and the 3 downstream
+        # readers each avoid a recompute).
+        sh = caching.persist(sh)
         hot = sh.groupBy("shingle").count().where(F.col("count") > max_df)
-        return attach_caches(
-            sh.join(hot.select("shingle"), "shingle", "left_anti"), sh
-        )
+        return sh.join(hot.select("shingle"), "shingle", "left_anti")
     return sh
 
 
@@ -165,18 +159,8 @@ def jaccard_pairs(sh: DataFrame, min_jaccard: float) -> DataFrame:
     The shingle table feeds three subtrees (both join sides + sizes);
     persist() materializes the expansion once instead of re-tokenizing
     the corpus per subtree — at scale this intermediate is exactly what
-    a pipeline would checkpoint to parquet between stages.
-
-    Cache lifetime (the convention for every persist() inside a query
-    builder — here, contam_q1, text_q7): queries return unmaterialized
-    DataFrames, so the builder cannot unpersist before the caller's
-    action runs. Every cached frame is ATTACHED to the returned
-    DataFrame (caching.attach_caches), so after the action a caller
-    releases the blocks with caching.release_caches(result) — VERDICT
-    r13 #5. Callers that run many queries in one session (bench.py
-    between passes, scripts/parity.py between queries) may instead
-    call `spark.catalog.clearCache()`."""
-    sh = sh.persist()
+    a pipeline would checkpoint to parquet between stages."""
+    sh = caching.persist(sh)
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -185,9 +169,7 @@ def jaccard_pairs(sh: DataFrame, min_jaccard: float) -> DataFrame:
         .groupBy(F.col("a.id").alias("id_i"), F.col("b.id").alias("id_j"))
         .agg(F.count("*").alias("inter"))
     )
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
+    return (
         inter.join(sizes.withColumnsRenamed({"id": "id_i", "sz": "sz_i"}), "id_i")
         .join(sizes.withColumnsRenamed({"id": "id_j", "sz": "sz_j"}), "id_j")
         .select(
@@ -197,8 +179,7 @@ def jaccard_pairs(sh: DataFrame, min_jaccard: float) -> DataFrame:
                 F.col("inter") / (F.col("sz_i") + F.col("sz_j") - F.col("inter")), 6
             ).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= min_jaccard),
-        sh,
+        .where(F.col("jaccard") >= min_jaccard)
     )
 
 
@@ -592,12 +573,7 @@ def verify_jaccard_pairs(
         .groupBy("id_i", "id_j")
         .agg(F.count("*").alias("inter"))
     )
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    # propagate cache attachments from the inputs (sh is persisted by
-    # the composed callers; cands may carry a signature cache) so
-    # release_caches on the verified pair list frees the whole chain
-    return attach_caches(
+    return (
         inter.join(sizes.withColumnsRenamed({"id": "id_i", "sz": "sz_i"}), "id_i")
         .join(sizes.withColumnsRenamed({"id": "id_j", "sz": "sz_j"}), "id_j")
         .select(
@@ -607,9 +583,7 @@ def verify_jaccard_pairs(
                 F.col("inter") / (F.col("sz_i") + F.col("sz_j") - F.col("inter")), 6
             ).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= min_jaccard),
-        sh,
-        cands,
+        .where(F.col("jaccard") >= min_jaccard)
     )
 
 
@@ -623,7 +597,7 @@ def minhash_near_dup_pairs(
     """The composed scale path: LSH candidates, exact-verified.
     Output ⊆ jaccard_pairs(...) with recall governed by the (k, b)
     s-curve — the test suite asserts recall against the exact tier."""
-    sh = doc_shingles(docs, max_df=max_df).persist()  # feeds sigs + verify + sizes
+    sh = caching.persist(doc_shingles(docs, max_df=max_df))  # feeds sigs + verify + sizes
     cands = lsh_candidate_pairs(minhash_signatures(sh, num_hashes), num_hashes, bands)
     return verify_jaccard_pairs(sh, cands, min_jaccard)
 
@@ -666,7 +640,7 @@ def incremental_minhash_pairs(
     # carry forwards the batch flag through the groupBy), then split —
     # signing batch and store separately would re-aggregate the same
     # persisted shingle table twice.
-    sig = minhash_signatures(sh, num_hashes, carry=(new_col,)).persist()
+    sig = caching.persist(minhash_signatures(sh, num_hashes, carry=(new_col,)))
     new_sig = sig.where(F.col(new_col)).select("id", "sig")
     new_bands = band_rows(new_sig, num_hashes, bands)
     store_bands = band_rows(
@@ -678,15 +652,7 @@ def incremental_minhash_pairs(
     )
     internal = lsh_candidate_pairs(new_sig, num_hashes, bands)
     cands = cross.unionByName(internal).distinct()
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    # sig is this operator's own cache; sh.select() strips any
-    # attachment the caller put on sh, so forward both explicitly
-    return attach_caches(
-        verify_jaccard_pairs(sh.select("id", "shingle"), cands, min_jaccard),
-        sig,
-        sh,
-    )
+    return verify_jaccard_pairs(sh.select("id", "shingle"), cands, min_jaccard)
 
 
 # --- tier 5: SimHash --------------------------------------------------------
@@ -776,7 +742,7 @@ def simhash_near_dup_pairs(
     mask = (1 << width) - 1
     # persist: the signature table feeds both sides of the band join.
     sh = doc_shingles(docs, max_df=max_df)
-    sig = simhash64(sh).persist()
+    sig = caching.persist(simhash64(sh))
     chunks = sig.select(
         "id",
         "simhash",
@@ -794,9 +760,7 @@ def simhash_near_dup_pairs(
     ).select("id", "simhash", "cc.chunk", "cc.val")
     a = chunks.alias("a")
     b = chunks.alias("b")
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
+    return (
         a.join(
             b,
             (F.col("a.chunk") == F.col("b.chunk"))
@@ -811,12 +775,7 @@ def simhash_near_dup_pairs(
             ).cast("int").alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
-        .distinct(),
-        sig,
-        # forwards the guard's expansion cache when max_df was set
-        # (simhash64 derives a fresh frame, which strips annotations —
-        # the caching.py survival rule)
-        sh,
+        .distinct()
     )
 
 
@@ -852,15 +811,14 @@ def dup_span_coverage(
     (n²/2⁶⁵); results are identical unless two distinct grams collide.
     The default string form keeps the DuckDB oracle hash-free. The
     per-(doc, gram) table is read by three subtrees, so it is
-    persisted (cache lifetime: see the convention note on
-    jaccard_pairs)."""
+    persisted (released by the caller's caching.cache_scope)."""
     grams = docs.select(
         F.col(id_col).alias("id"),
         F.explode(shingles(tokens(text_col), span_n)).alias("gram"),
     )
     if hash_grams:
         grams = grams.select("id", F.xxhash64("gram").alias("gram"))
-    per = grams.groupBy("id", "gram").agg(F.count("*").alias("c")).persist()
+    per = caching.persist(grams.groupBy("id", "gram").agg(F.count("*").alias("c")))
     dup = (
         per.groupBy("gram")
         .agg(F.sum("c").alias("tot"))
@@ -874,16 +832,11 @@ def dup_span_coverage(
         .agg(F.sum("c").alias("n_dup"))
     )
     frac = F.round(F.coalesce(F.col("n_dup"), F.lit(0)) / F.col("n_spans"), 6)
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        stats.join(hits, "id", "left").select(
-            "id",
-            F.col("n_spans").cast("bigint").alias("n_spans"),
-            F.coalesce(F.col("n_dup"), F.lit(0)).cast("bigint").alias("n_dup_spans"),
-            frac.alias("dup_frac"),
-        ),
-        per,
+    return stats.join(hits, "id", "left").select(
+        "id",
+        F.col("n_spans").cast("bigint").alias("n_spans"),
+        F.coalesce(F.col("n_dup"), F.lit(0)).cast("bigint").alias("n_dup_spans"),
+        frac.alias("dup_frac"),
     )
 
 
@@ -995,9 +948,11 @@ def span_scrub(
     """
     from pyspark.sql import Window
 
-    toks = docs.select(
-        F.col(id_col).alias("id"), tokens(text_col).alias("ts")
-    ).persist()  # two subtrees (positions, spans) read the tokenize pass
+    toks = caching.persist(
+        docs.select(
+            F.col(id_col).alias("id"), tokens(text_col).alias("ts")
+        )
+    )  # two subtrees (positions, spans) read the tokenize pass
     pos = toks.select("id", F.posexplode("ts").alias("p", "tok"))
     sp = toks.select(
         "id", F.posexplode(shingles(F.col("ts"), span_n)).alias("s", "gram")
@@ -1039,22 +994,17 @@ def span_scrub(
     # keep their row: nothing to remove, kept_frac vacuously 1.0.
     base = toks.select("id", F.size("ts").alias("n_base"))
     out = base.join(agg, "id", "left")
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        out.select(
-            "id",
-            F.col("n_base").cast("bigint").alias("n_tokens"),
-            F.coalesce(F.col("n_kept"), F.lit(0)).cast("bigint").alias("n_kept"),
-            F.when(
-                F.col("n_base") > 0,
-                F.round(F.coalesce(F.col("n_kept"), F.lit(0)) / F.col("n_base"), 6),
-            )
-            .otherwise(F.lit(1.0))
-            .alias("kept_frac"),
-            F.coalesce(F.col("scrubbed"), F.lit("")).alias("scrubbed"),
-        ),
-        toks,
+    return out.select(
+        "id",
+        F.col("n_base").cast("bigint").alias("n_tokens"),
+        F.coalesce(F.col("n_kept"), F.lit(0)).cast("bigint").alias("n_kept"),
+        F.when(
+            F.col("n_base") > 0,
+            F.round(F.coalesce(F.col("n_kept"), F.lit(0)) / F.col("n_base"), 6),
+        )
+        .otherwise(F.lit(1.0))
+        .alias("kept_frac"),
+        F.coalesce(F.col("scrubbed"), F.lit("")).alias("scrubbed"),
     )
 
 
@@ -1122,17 +1072,15 @@ def dedup_corpus_greedy(
     feed chunked in ascending id order, streamed ingest's surviving
     set equals this exactly (tested) — the batch/streaming parity
     contract of a crawl pipeline's dedup stage."""
-    pairs = minhash_near_dup_pairs(docs, min_jaccard, num_hashes, bands)
-    rejected = greedy_reject_ids(pairs)
-    # the collect inside greedy_reject_ids fully consumed the pair
-    # list; the returned anti-join reads only `docs` — release the
-    # shingle cache now (the consume-own-cache lifecycle case)
-    from distributed_mapreduce_spark.caching import release_caches
-
-    release_caches(pairs)
+    spark = docs.sparkSession
+    # the collect inside greedy_reject_ids fully consumes the pair list
+    # and the returned anti-join reads only `docs`: the shingle cache
+    # dies with this scope
+    with caching.cache_scope(spark):
+        pairs = minhash_near_dup_pairs(docs, min_jaccard, num_hashes, bands)
+        rejected = greedy_reject_ids(pairs)
     if not rejected:
         return docs
-    spark = docs.sparkSession
     rej_df = spark.createDataFrame(
         [(int(x),) for x in sorted(rejected)], f"{id_col} bigint"
     )

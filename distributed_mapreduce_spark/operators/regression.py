@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
+
 GD_LR = 0.5
 GD_ITERS = 3
 
@@ -45,7 +47,7 @@ def linreg_gd(
     x, y = F.col(x_col), F.col(y_col)
     # persist: one scan of the feature prep instead of iters+1 (the
     # kmeans_lloyd cache-the-training-set idiom; numerically neutral)
-    xy = xy.persist()
+    xy = caching.persist(xy)
 
     def dec12(c):
         return F.round(c, 12).cast("decimal(22,12)")
@@ -63,16 +65,11 @@ def linreg_gd(
         ).collect()[0]
         w0, w1 = float(row["w0"]), float(row["w1"])
     e = (F.lit(w0) + F.lit(w1) * x) - y
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        xy.agg(
-            F.lit(w0).alias("w0"),
-            F.lit(w1).alias("w1"),
-            davg(e * e).alias("mse"),
-            F.count("*").alias("n"),
-        ),
-        xy,
+    return xy.agg(
+        F.lit(w0).alias("w0"),
+        F.lit(w1).alias("w1"),
+        davg(e * e).alias("mse"),
+        F.count("*").alias("n"),
     )
 
 
@@ -103,7 +100,7 @@ def linsvm_gd(
     y = F.col(y_col)
     # persist: one scan of the feature prep instead of iters+1 (the
     # kmeans_lloyd cache-the-training-set idiom; numerically neutral)
-    xy = xy.persist()
+    xy = caching.persist(xy)
 
     def dec12(c):
         return F.round(c, 12).cast("decimal(22,12)")
@@ -132,19 +129,14 @@ def linsvm_gd(
     z = F.lit(w[0])
     for j, f in enumerate(features):
         z = z + F.lit(w[j + 1]) * F.col(f)
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        xy.agg(
-            *[F.lit(w[j]).alias(f"w{j}") for j in range(len(w))],
-            davg(F.greatest(F.lit(0.0), F.lit(1.0) - y * z)).alias("hinge"),
-            F.round(
-                F.sum(((y * z) > 0).cast("bigint")).cast("double") / F.count("*"),
-                6,
-            ).alias("accuracy"),
-            F.count("*").alias("n"),
-        ),
-        xy,
+    return xy.agg(
+        *[F.lit(w[j]).alias(f"w{j}") for j in range(len(w))],
+        davg(F.greatest(F.lit(0.0), F.lit(1.0) - y * z)).alias("hinge"),
+        F.round(
+            F.sum(((y * z) > 0).cast("bigint")).cast("double") / F.count("*"),
+            6,
+        ).alias("accuracy"),
+        F.count("*").alias("n"),
     )
 
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
+
 BUCKETS = 100
 
 
@@ -192,13 +194,11 @@ def global_shuffle_index(
     # localCheckpoint — on purpose (ADVICE r9): checkpoint blocks are
     # invisible to the CacheManager, so repeated library calls leaked
     # executor blocks with no release path short of hunting orphan
-    # RDDs. Persisted blocks are released by `spark.catalog.clearCache()`
-    # (or unpersist on any equivalent plan), and the retained lineage
-    # makes release safe at ANY point — a post-release action just
-    # recomputes the deterministic scan+md5. Callers running many
-    # epochs should clearCache between them; the bench harness already
-    # does this per query.
-    withh = withh.persist()
+    # RDDs. The persisted blocks are released by the caller's
+    # caching.cache_scope, and the retained lineage makes release safe
+    # at ANY point — a post-release action just recomputes the
+    # deterministic scan+md5.
+    withh = caching.persist(withh)
     counts = {
         r["__b"]: r["c"]
         for r in withh.groupBy("__b").agg(F.count("*").alias("c")).collect()
@@ -225,12 +225,7 @@ def global_shuffle_index(
     from pyspark.sql import Window
 
     win = Window.partitionBy("__b").orderBy(F.col("__h").asc(), F.col(key_col).asc())
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        withh.withColumn("__rk", F.row_number().over(win)).select(
-            *df.columns,
-            (off_map[F.col("__b")] + F.col("__rk") - 1).cast("bigint").alias("pos"),
-        ),
-        withh,
+    return withh.withColumn("__rk", F.row_number().over(win)).select(
+        *df.columns,
+        (off_map[F.col("__b")] + F.col("__rk") - 1).cast("bigint").alias("pos"),
     )

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
 from distributed_mapreduce_spark.functions.vectors import cosine
 
 DEFAULT_NUM_CELLS = 16
@@ -489,15 +490,9 @@ def kmeans_lloyd(
     # persist: the array training set is read once per iteration plus
     # the final assignment — the standard cache-the-training-set idiom
     # of iterative ML (pyspark.ml does the same); numerically neutral.
-    # The returned frame still reads it, so it is attached for
-    # caching.release_caches (the operator-scope lifecycle contract).
-    flat = _kmeans_flat(emb, id_col, vec_col).persist()
+    flat = caching.persist(_kmeans_flat(emb, id_col, vec_col))
     cents = _kmeans_iterate(flat, dim, k, iters, id_col)
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        flat.select(id_col, _kmeans_best_cell(cents).alias("cell")), flat
-    )
+    return flat.select(id_col, _kmeans_best_cell(cents).alias("cell"))
 
 
 def _kmeans_flat(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -582,11 +577,9 @@ def kmeans_train(
     to the centroids kmeans_lloyd's own assignment uses (shared loop).
     Consumes its own cache: the training set is unpersisted before
     returning (the centroid list is plain driver floats)."""
-    flat = _kmeans_flat(emb, id_col, vec_col).persist()
-    try:
+    with caching.cache_scope(emb.sparkSession):
+        flat = caching.persist(_kmeans_flat(emb, id_col, vec_col))
         return _kmeans_iterate(flat, dim, k, iters, id_col)
-    finally:
-        flat.unpersist()
 
 
 def kmeans_assign(
@@ -645,9 +638,11 @@ def power_iteration(
     pipeline thresholds for outlier removal or uses as the SemDeDup
     cell-splitting direction."""
     spark = emb.sparkSession
-    flat = emb.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v")
-    ).persist()
+    flat = caching.persist(
+        emb.select(
+            id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v")
+        )
+    )
     from distributed_mapreduce_spark.functions.vectors import (
         round12_decimal_mean_sql,
     )
@@ -716,11 +711,7 @@ def power_iteration(
             *[f"round({s[i]!r}D / {nrm}, 12) as v{i}" for i in range(dim)]
         ).collect()[0]
         v = [float(vrow[f"v{i}"]) for i in range(dim)]
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        flat.select(id_col, F.round(centered_dot(v), 6).alias("proj")), flat
-    )
+    return flat.select(id_col, F.round(centered_dot(v), 6).alias("proj"))
 
 
 def power_iteration_sql(
@@ -1374,7 +1365,7 @@ def knn_join_ivf(
             [(int(c), v) for c, v in centroids], "cell int, cvec array<double>"
         )
         wr = Window.partitionBy("__id").orderBy(F.desc("__score"), F.asc("cell"))
-        ranked = (
+        ranked = caching.persist(
             emb.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
             .crossJoin(F.broadcast(cent_df))
             .select(
@@ -1385,13 +1376,10 @@ def knn_join_ivf(
             )
             .withColumn("__rk", F.row_number().over(wr))
             .where(F.col("__rk") <= nprobe)
-            .persist()
         )
-        cached: tuple = (ranked,)
         a = flat(ranked, "__id", "__v", "__qid", "__a")
         b = flat(ranked.where(F.col("__rk") == 1), "__id", "__v", "__nb", "__b")
     else:
-        cached = ()
         qcells = assign_probe_cells(
             emb.select(F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qv")),
             centroids,
@@ -1403,9 +1391,7 @@ def knn_join_ivf(
         b = flat(members, id_col, vec_col, "__nb", "__b")
     dot = F.expr(pair_dot_expr_spark("__a", "__b", dim))
     w = Window.partitionBy("__qid").orderBy(F.desc("cos_sim"), F.asc("__nb"))
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
+    return (
         a.join(b, "cell")
         .where(F.col("__qid") != F.col("__nb"))
         .select("__qid", "__nb", F.round(dot, 6).alias("cos_sim"))
@@ -1414,6 +1400,5 @@ def knn_join_ivf(
         .select(
             F.col("__qid").alias("id"), F.col("__nb").alias("nb"), "cos_sim"
         )
-        .orderBy("id", F.desc("cos_sim"), F.asc("nb")),
-        *cached,
+        .orderBy("id", F.desc("cos_sim"), F.asc("nb"))
     )

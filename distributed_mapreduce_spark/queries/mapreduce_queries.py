@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
 from distributed_mapreduce_spark.sources import table
 
 # Same token rule as the reference: words are maximal letter runs
@@ -136,7 +137,7 @@ def mr_q4_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Materialize before the temp dir vanishes: the count forces the
         # full read and the localCheckpoint pins the parsed rows.
-        return parsed.localCheckpoint(eager=True)
+        return caching.local_checkpoint(parsed)[0]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

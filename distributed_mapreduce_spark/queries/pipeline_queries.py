@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
 from distributed_mapreduce_spark.operators.contamination import (
     contamination_report,
     contamination_report_tagged,
@@ -140,9 +141,9 @@ def pipe_q3_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, text string, lang string, source string, n_chars long",
         )
         # Materialize before the temp dir vanishes (mr_q4 convention).
-        return back.select(
-            "doc_id", "text", "lang", "source", "n_chars"
-        ).localCheckpoint(eager=True)
+        return caching.local_checkpoint(
+            back.select("doc_id", "text", "lang", "source", "n_chars")
+        )[0]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -291,11 +292,12 @@ def contam_q1_benchmark_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg + bench broadcast side), which previously cost a full
     # tokenize pass per read (VERDICT r3 item 5). At 100 TB this
     # intermediate is exactly the stage a pipeline checkpoints to
-    # parquet; persist() is the fixture-scale stand-in (cache lifetime:
-    # see the convention note on jaccard_pairs).
-    sh = doc_shingles(
-        docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
-    ).persist()
+    # parquet; persist() is the fixture-scale stand-in.
+    sh = caching.persist(
+        doc_shingles(
+            docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
+        )
+    )
     # ONE-PASS report over the tagged expansion (r17, VERDICT r16 #3 —
     # measured −15%: 2.04 → 1.73 s min-of-5 same-window): the two-sided
     # contamination_report re-read the cache three times and paid a
@@ -307,17 +309,12 @@ def contam_q1_benchmark_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # suggestion — was measured and rejected: 2.28 vs 2.04 s, the two
     # extra broadcast builds cost more than the distinct they saved.)
     rep = contamination_report_tagged(sh, CONTAM_MIN_OVERLAP)
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        rep.select(
-            F.col("id").alias("doc_id"),
-            "n_shingles",
-            "n_hit",
-            "overlap",
-            F.col("contaminated").cast("int").alias("contaminated"),
-        ),
-        sh,
+    return rep.select(
+        F.col("id").alias("doc_id"),
+        "n_shingles",
+        "n_hit",
+        "overlap",
+        F.col("contaminated").cast("int").alias("contaminated"),
     )
 
 
@@ -436,7 +433,7 @@ def pipe_q1_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join's right side is the (tiny) duplicate list, AQE
     broadcasts it; sampling is a map predicate. One corpus scan for
     quality + one for shingles — a production run would share one
-    persisted scan (the jaccard_pairs convention note)."""
+    persisted scan (as jaccard_pairs does)."""
     from distributed_mapreduce_spark.functions.text import (
         avg_token_len,
         stopword_ratio,
@@ -557,21 +554,20 @@ def contam_q2_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT bench-shingle set, a semi-join membership probe — never a
     pair join; removal is an anti-join of the flag set."""
     docs = widen(table(spark, sf_dir, "documents"))
-    sh = doc_shingles(
-        docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
-    ).persist()
+    sh = caching.persist(
+        doc_shingles(
+            docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
+        )
+    )
     bench_sh = sh.where(F.col("is_bench")).select("id", "shingle")
     train_sh = sh.where(~F.col("is_bench")).select("id", "shingle")
     # score TRAIN docs against BENCH shingles (the reverse probe)
     rep = contamination_report(train_sh, bench_sh, CONTAM_MIN_OVERLAP)
     dirty = rep.where(F.col("contaminated")).select("id")
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
+    return (
         docs.where(F.col("source") != BENCH_SOURCE)
         .join(dirty, docs.doc_id == dirty.id, "left_anti")
-        .select("doc_id", "source", "lang", "n_chars"),
-        sh,
+        .select("doc_id", "source", "lang", "n_chars")
     )
 
 
@@ -735,11 +731,13 @@ def contam_q3_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = widen(table(spark, sf_dir, "documents"))
-    sh = doc_shingles(
-        docs,
-        max_df=MAX_SHINGLE_DF,
-        carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),),
-    ).persist()
+    sh = caching.persist(
+        doc_shingles(
+            docs,
+            max_df=MAX_SHINGLE_DF,
+            carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),),
+        )
+    )
     sig_b = minhash_signatures(sh.where(F.col("is_bench")).select("id", "shingle"))
     sig_t = minhash_signatures(sh.where(~F.col("is_bench")).select("id", "shingle"))
     cands = (
@@ -751,16 +749,10 @@ def contam_q3_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     pairs = verify_jaccard_pairs(sh.select("id", "shingle"), cands, NEAR_DUP_JACCARD)
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        pairs.select(
-            F.col("id_i").alias("bench_id"),
-            F.col("id_j").alias("train_id"),
-            "jaccard",
-        ),
-        sh,
-        pairs,
+    return pairs.select(
+        F.col("id_i").alias("bench_id"),
+        F.col("id_j").alias("train_id"),
+        "jaccard",
     )
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
 from distributed_mapreduce_spark.functions.vectors import (
     cosine_sql,
     pair_dot_expr_spark,
@@ -92,15 +93,15 @@ def sim_q2_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the float ops.) widen BEFORE persist: see dedup_q6.
     cols = [f"CAST(embedding[{i}] AS DOUBLE) as __v{i}" for i in range(DIM)]
     sq = F.expr(pair_dot_expr_spark("__v", "__v", DIM))
-    flat = widen(
-        emb.selectExpr("vec_id as id", *cols).withColumn("__norm", F.sqrt(sq))
-    ).persist()
+    flat = caching.persist(
+        widen(
+            emb.selectExpr("vec_id as id", *cols).withColumn("__norm", F.sqrt(sq))
+        )
+    )
     d = F.expr(pair_dot_expr_spark("a.__v", "b.__v", DIM))
     denom = F.col("a.__norm") * F.col("b.__norm")
     cos = F.when(denom > 0, d / denom).otherwise(F.lit(0.0))
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
+    return (
         _grid_self_pair_join(flat, EMB_GRID_BLOCKS)
         .select(
             F.least(F.col("a.id"), F.col("b.id")).alias("id_i"),
@@ -108,8 +109,7 @@ def sim_q2_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cos, 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("id_i"), F.asc("id_j"))
-        .limit(TOP_PAIRS),
-        flat,
+        .limit(TOP_PAIRS)
     )
 
 
@@ -354,24 +354,20 @@ def dedup_q6_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Catalyst analysis per construction (measured r5; at sf1 the
     # duplicated normalize halved the stress time when removed) — and
     # at scale this persisted projection is exactly the intermediate a
-    # pipeline checkpoints before a self-join (cache lifetime: see the
-    # convention note on operators/dedup.jaccard_pairs). widen BEFORE
+    # pipeline checkpoints before a self-join. widen BEFORE
     # persist: the single-file fixture scan is one partition; unwidened,
     # the whole normalize pass and every downstream explode would run
     # on one core. (On a real multi-partition table this is a no-op.)
-    flat = widen(_flat_normalized(emb, "id", "__v")).persist()
+    flat = caching.persist(widen(_flat_normalized(emb, "id", "__v")))
     dot = F.expr(pair_dot_expr_spark("a.__v", "b.__v", DIM))
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
+    return (
         _grid_self_pair_join(flat, EMB_GRID_BLOCKS)
         .select(
             F.least(F.col("a.id"), F.col("b.id")).alias("id_i"),
             F.greatest(F.col("a.id"), F.col("b.id")).alias("id_j"),
             F.round(dot, 6).alias("cos_sim"),
         )
-        .where(F.col("cos_sim") >= EMB_DUP_THRESHOLD),
-        flat,
+        .where(F.col("cos_sim") >= EMB_DUP_THRESHOLD)
     )
 
 
@@ -450,7 +446,7 @@ def semdedup_representatives(
     else:
         assign = kmeans_lloyd(emb, dim, k, iters)  # (vec_id, cell)
     flat = widen(_flat_normalized(emb, "vec_id", "__v", dim))
-    j = flat.join(assign, "vec_id").persist()
+    j = caching.persist(flat.join(assign, "vec_id"))
     dot = F.expr(pair_dot_expr_spark("a.__v", "b.__v", dim))
     a, b = j.alias("a"), j.alias("b")
     pairs = (
@@ -470,18 +466,13 @@ def semdedup_representatives(
         "cell",
         F.coalesce("component", F.col("vec_id")).alias("component"),
     )
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
+    return (
         members.groupBy("component")
         .agg(
             F.min("cell").cast("int").alias("cell"),
             F.count("*").alias("n_members"),
         )
-        .select(F.col("component").alias("rep_id"), "cell", "n_members"),
-        j,
-        assign,
-        comp,
+        .select(F.col("component").alias("rep_id"), "cell", "n_members")
     )
 
 
@@ -582,10 +573,12 @@ def label_centroid_profile(
     # the r16 construction-cost discipline (see functions/vectors.py);
     # round12_decimal_mean_sql is the same staging both engines run,
     # so using it as the Spark-side source keeps ONE definition.
-    flat = emb.selectExpr(
-        f"{label_col} as label",
-        *[f"CAST(embedding[{i}] AS DOUBLE) as x{i}" for i in range(d)],
-    ).persist()
+    flat = caching.persist(
+        emb.selectExpr(
+            f"{label_col} as label",
+            *[f"CAST(embedding[{i}] AS DOUBLE) as x{i}" for i in range(d)],
+        )
+    )
     cents = flat.groupBy("label").agg(
         F.count("*").alias("n_vecs"),
         *[
@@ -605,17 +598,12 @@ def label_centroid_profile(
         F.round(nm, 6).alias("centroid_norm"),
         cos.alias("cos"),
     )
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        scored.groupBy("label", "n_vecs", "centroid_norm").agg(
-            F.round(
-                F.sum(dec12(F.col("cos"))).cast("double") / F.count("*"), 6
-            ).alias("mean_cos"),
-            F.min("cos").alias("min_cos"),
-            F.max("cos").alias("max_cos"),
-        ),
-        flat,
+    return scored.groupBy("label", "n_vecs", "centroid_norm").agg(
+        F.round(
+            F.sum(dec12(F.col("cos"))).cast("double") / F.count("*"), 6
+        ).alias("mean_cos"),
+        F.min("cos").alias("min_cos"),
+        F.max("cos").alias("max_cos"),
     )
 
 
@@ -1003,7 +991,7 @@ def sim_q10_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_spark.sources import widen
 
     emb = _emb(spark, sf_dir)
-    flat = widen(_flat_normalized(emb, "id", "__v")).persist()
+    flat = caching.persist(widen(_flat_normalized(emb, "id", "__v")))
     dot = F.expr(pair_dot_expr_spark("a.__v", "b.__v", DIM))
     both = (
         _grid_self_pair_join(flat, EMB_GRID_BLOCKS)
@@ -1023,13 +1011,10 @@ def sim_q10_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("__e.id").alias("id"), F.col("__e.nb").alias("nb"), "cos_sim")
     )
     w_glob = Window.partitionBy("id").orderBy(F.desc("cos_sim"), F.asc("nb"))
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
+    return (
         both.withColumn("__rg", F.row_number().over(w_glob))
         .where(F.col("__rg") <= K_NN)
-        .select("id", "nb", "cos_sim"),
-        flat,
+        .select("id", "nb", "cos_sim")
     )
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark import caching
 from distributed_mapreduce_spark.functions.text import (
     BPE_ISH_PATTERN,
     C4_BAD_LINE_WORD,
@@ -600,9 +601,8 @@ def text_q7_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality sweep runs at 100 TB."""
     docs = widen(table(spark, sf_dir, "documents"))
     # Two aggregation subtrees read the token arrays — persist so the
-    # scan+tokenize pass runs once (same convention — incl. the cache
-    # lifetime note — as jaccard_pairs and contam_q1).
-    toks = docs.select("doc_id", tokens("text").alias("ts")).persist()
+    # scan+tokenize pass runs once (as in jaccard_pairs and contam_q1).
+    toks = caching.persist(docs.select("doc_id", tokens("text").alias("ts")))
     tok_stats = (
         toks.select("doc_id", F.size("ts").alias("n_tokens"), F.explode("ts").alias("tok"))
         .groupBy("doc_id", "n_tokens", "tok")
@@ -620,27 +620,22 @@ def text_q7_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.max("count").alias("top_big_n"), F.sum("count").alias("n_bigrams"))
     )
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        tok_stats.join(big_stats, "doc_id").select(
-            "doc_id",
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            F.round(F.col("n_distinct") / F.col("n_tokens"), 6).alias("ttr"),
-            F.round(F.col("top_tok_n") / F.col("n_tokens"), 6).alias(
-                "top_token_frac"
-            ),
-            F.round(F.col("top_big_n") / F.col("n_bigrams"), 6).alias(
-                "top_bigram_frac"
-            ),
-            (
-                F.round(F.col("top_big_n") / F.col("n_bigrams"), 6)
-                >= F.lit(REPETITION_TOP_BIGRAM)
-            )
-            .cast("int")
-            .alias("repetitive"),
+    return tok_stats.join(big_stats, "doc_id").select(
+        "doc_id",
+        F.col("n_tokens").cast("bigint").alias("n_tokens"),
+        F.round(F.col("n_distinct") / F.col("n_tokens"), 6).alias("ttr"),
+        F.round(F.col("top_tok_n") / F.col("n_tokens"), 6).alias(
+            "top_token_frac"
         ),
-        toks,
+        F.round(F.col("top_big_n") / F.col("n_bigrams"), 6).alias(
+            "top_bigram_frac"
+        ),
+        (
+            F.round(F.col("top_big_n") / F.col("n_bigrams"), 6)
+            >= F.lit(REPETITION_TOP_BIGRAM)
+        )
+        .cast("int")
+        .alias("repetitive"),
     )
 
 
@@ -751,7 +746,7 @@ def text_q14_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dl from tf, not from raw tokens: same numbers, half the work;
     # persisted because three consumers (dfq join, dl, avgdl) hang off it
-    tf = tf.localCheckpoint()
+    tf, _ = caching.local_checkpoint(tf)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     total_tokens = dl.agg(F.sum("dl")).collect()[0][0]
     avgdl = float(total_tokens) / float(n_docs)
@@ -908,10 +903,10 @@ def dedup_q12_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guarantees the expensive pair-generation subtree executes once
     # rather than relying on exchange reuse across differently-keyed
     # consumers (shadow floor pass r7).
-    e = (
-        jaccard_pairs(doc_shingles(docs, max_df=MAX_SHINGLE_DF), NEAR_DUP_JACCARD)
-        .select("id_i", "id_j")
-        .localCheckpoint()
+    e, _ = caching.local_checkpoint(
+        jaccard_pairs(
+            doc_shingles(docs, max_df=MAX_SHINGLE_DF), NEAR_DUP_JACCARD
+        ).select("id_i", "id_j")
     )
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
@@ -1186,11 +1181,13 @@ def dedup_q15_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_spark.operators.dedup import incremental_minhash_pairs
 
     docs = widen(table(spark, sf_dir, "documents"))
-    sh = doc_shingles(
-        docs,
-        max_df=MAX_SHINGLE_DF,
-        carry=((F.pmod("doc_id", F.lit(5)) == 0).alias("is_new"),),
-    ).persist()
+    sh = caching.persist(
+        doc_shingles(
+            docs,
+            max_df=MAX_SHINGLE_DF,
+            carry=((F.pmod("doc_id", F.lit(5)) == 0).alias("is_new"),),
+        )
+    )
     return incremental_minhash_pairs(
         sh, "is_new", NEAR_DUP_JACCARD, bands=MINHASH_BANDS
     )
@@ -1227,12 +1224,14 @@ def dedup_q16_maintained_lsh_store(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     docs = widen(table(spark, sf_dir, "documents"))
-    sh = doc_shingles(
-        docs,
-        max_df=MAX_SHINGLE_DF,
-        carry=((F.pmod("doc_id", F.lit(5)) == 0).alias("is_new"),),
-    ).persist()
-    sig = minhash_signatures(sh, carry=("is_new",)).persist()
+    sh = caching.persist(
+        doc_shingles(
+            docs,
+            max_df=MAX_SHINGLE_DF,
+            carry=((F.pmod("doc_id", F.lit(5)) == 0).alias("is_new"),),
+        )
+    )
+    sig = caching.persist(minhash_signatures(sh, carry=("is_new",)))
     new_sig = sig.where(F.col("is_new")).select("id", "sig")
     store_sig = sig.where(~F.col("is_new")).select("id", "sig")
     tbl = "dedup_q16_band_idx"
@@ -1248,13 +1247,7 @@ def dedup_q16_maintained_lsh_store(spark: SparkSession, sf_dir: str) -> DataFram
     )
     internal = lsh_candidate_pairs(new_sig, bands=MINHASH_BANDS)
     cands = cross.unionByName(internal).distinct()
-    from distributed_mapreduce_spark.caching import attach_caches
-
-    return attach_caches(
-        verify_jaccard_pairs(sh.select("id", "shingle"), cands, NEAR_DUP_JACCARD),
-        sh,
-        sig,
-    )
+    return verify_jaccard_pairs(sh.select("id", "shingle"), cands, NEAR_DUP_JACCARD)
 
 
 def dedup_q17_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:

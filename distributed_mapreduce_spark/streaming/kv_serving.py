@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from distributed_mapreduce_spark import caching
 from distributed_mapreduce_spark.operators.kv import (
     NSHARDS,
     apply_kv_ops,
@@ -98,8 +99,8 @@ def foreach_batch_kv_serving(
     def write_batch(df: DataFrame, batch_id: int) -> None:
         spark = df.sparkSession
         # ops feed two actions (touched-shard probe + merge write)
-        df = df.select("key", "seq", "op", "value").persist()
-        try:
+        with caching.cache_scope(spark):
+            df = caching.persist(df.select("key", "seq", "op", "value"))
             touched = [
                 r.p
                 for r in df.where(F.col("op") != F.lit("get"))
@@ -144,8 +145,6 @@ def foreach_batch_kv_serving(
                 batch_id, touched, NSHARDS, False, "key",
                 schema=_KV_SCHEMA, bucket_expr="key2shard",
             )
-        finally:
-            df.unpersist()
 
     return (
         ops_stream.writeStream.foreachBatch(write_batch)

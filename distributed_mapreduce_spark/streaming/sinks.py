@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from distributed_mapreduce_spark.caching import persistent_rdd_ids, unpersist_rdd_ids
+from distributed_mapreduce_spark import caching
 from distributed_mapreduce_spark.streaming.commitlog import (
     ManifestStore,
     VersionManifests,
@@ -519,8 +519,8 @@ def foreach_batch_cdc_merge_partitioned(
         # The batch feeds two actions (the touched-bucket probe below
         # and the merge write) — persist so the change source is read
         # once per micro-batch, not once per action (code-review r7).
-        df = df.persist()
-        try:
+        with caching.cache_scope(spark):
+            df = caching.persist(df)
             # Partitions this batch touches: distinct buckets of the
             # change keys — a bounded (≤ n_buckets) driver list, the
             # operators/incremental.py affected-partition pattern.
@@ -628,8 +628,6 @@ def foreach_batch_cdc_merge_partitioned(
                     for f in merged.schema.fields
                 ],
             )
-        finally:
-            df.unpersist()
 
     return (
         changes.writeStream.foreachBatch(write_batch)
@@ -1253,25 +1251,11 @@ def _check_id_buckets(manifests, id_buckets: int, store_path) -> None:
 class _IngestBatch:
     """One micro-batch as an ingest sink's step sees it — the session,
     the store, the committed-manifest snapshot taken at batch start and
-    the batch id — plus the batch's release scope. `release` (called by
-    _gated_ingest in `finally`, on success and failure alike) frees
-    every frame persisted through `persist` and every RDD persisted
-    while the batch ran, which covers localCheckpoint blocks: they
-    never enter the SQL cache, so only their RDD ids reach them
-    (caching.py's orphan-RDD contract). A failing batch redelivered
-    again and again therefore never accumulates blocks. The RDD-id
-    diff assumes no other driver thread persists RDDs while the batch
-    runs (see caching.persistent_rdd_ids)."""
+    the batch id."""
 
     def __init__(self, spark, ms, manifests, batch_id: int):
         self.spark, self.ms = spark, ms
         self.manifests, self.batch_id = manifests, batch_id
-        self._frames: list[DataFrame] = []
-        self._rdds_before = persistent_rdd_ids(spark)
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        self._frames.append(df.persist())
-        return df
 
     def pruned_dirs(
         self, buckets, subdir: str, touched_key: str = "touched"
@@ -1280,13 +1264,6 @@ class _IngestBatch:
         (ManifestStore.pruned_partition_dirs over the batch's snapshot)."""
         return self.ms.pruned_partition_dirs(
             buckets, subdir, manifests=self.manifests, touched_key=touched_key
-        )
-
-    def release(self) -> None:
-        for df in self._frames:
-            df.unpersist()
-        unpersist_rdd_ids(
-            self.spark, persistent_rdd_ids(self.spark) - self._rdds_before
         )
 
 
@@ -1331,12 +1308,15 @@ def _gated_ingest(
          gate and every stage after) and gated by _known_id_gate;
       4. `step(ctx, gated)` — ctx an _IngestBatch — writes the batch's
          `batch=<id>` dirs and sidecars and returns (payload fields,
-         store dirs it read). A step persists through `ctx.persist`
-         (or localCheckpoints) and never releases anything itself;
+         store dirs it read). A step persists and checkpoints through
+         caching.persist / caching.local_checkpoint and never releases
+         anything itself;
       5. the manifest commits LAST, stamped with `id_buckets`,
          `read_bytes` (on-disk bytes of every committed-store dir the
          batch read — gate and step) and `elapsed_s`;
-      6. the batch's caches are released, success or failure.
+      6. the batch's caching.cache_scope releases every frame and
+         checkpoint registered in it, success or failure — a failing
+         batch redelivered again and again never accumulates blocks.
 
     Replay of an uncommitted batch converges: its `batch=<id>` writes
     are overwrite-idempotent and invisible to readers until the
@@ -1352,9 +1332,9 @@ def _gated_ingest(
         manifests = ms.manifests()
         _check_id_buckets(manifests, id_buckets, store_path)
         ctx = _IngestBatch(batch_df.sparkSession, ms, manifests, batch_id)
-        try:
+        with caching.cache_scope(ctx.spark):
             gated, gate_dirs = _known_id_gate(
-                ctx, ctx.persist(batch_df), id_buckets, id_col
+                ctx, caching.persist(batch_df), id_buckets, id_col
             )
             fields, read_dirs = step(ctx, gated)
             ms.commit(
@@ -1366,8 +1346,6 @@ def _gated_ingest(
                     "elapsed_s": round(time.monotonic() - t0, 3),
                 },
             )
-        finally:
-            ctx.release()
 
     return (
         stream.writeStream.foreachBatch(ingest)
@@ -1384,7 +1362,7 @@ def _write_accepted(
     `accepted/batch=<id>` (without the clean sink's `_fp` carry
     column) and their ids to the id sidecar. Returns (accepted,
     n_accepted, touched id buckets)."""
-    accepted = ctx.persist(accepted)
+    accepted = caching.persist(accepted)
     n_acc = accepted.count()
     _write(accepted.drop("_fp"), ctx.ms.batch_dir(ctx.batch_id, "accepted"))
     touched = _write_id_sidecar(
@@ -1431,7 +1409,7 @@ def _near_dup_gate(
     # profiled ~1 s/batch single-task); doc_shingles widens its input
     # internally (operators/dedup.py), which covers this — no outer
     # widen() needed (ADVICE r16).
-    sh_b = ctx.persist(doc_shingles(batch_df, text_col, id_col))
+    sh_b = caching.persist(doc_shingles(batch_df, text_col, id_col))
     sig_b = minhash_signatures(sh_b, num_hashes)
     cands = lsh_candidate_pairs(sig_b, num_hashes, bands)
     if spark.catalog.tableExists(table_name):
@@ -1440,7 +1418,7 @@ def _near_dup_gate(
         ).distinct()
     # candidate list feeds the bucket probe, the shingle semi-join and
     # the verify join — output-scale, persist
-    cands = ctx.persist(cands)
+    cands = caching.persist(cands)
     ends = (
         cands.select(F.col("id_i").alias("id"))
         .unionByName(cands.select(F.col("id_j").alias("id")))
@@ -1915,7 +1893,7 @@ def foreach_batch_ann_ingest(
         coded = assign_cells(batch_df, centroids, id_col, vec_col)
         if codebooks is not None:
             coded = pq_encode(coded, codebooks, id_col, vec_col, carry=("cell",))
-        coded = ctx.persist(coded)  # feeds count + data write + sidecar
+        coded = caching.persist(coded)  # feeds count + data write + sidecar
         n = coded.count()
         _write(coded, ctx.ms.batch_dir(ctx.batch_id), "cell")
         touched = _write_id_sidecar(
@@ -2155,7 +2133,7 @@ def foreach_batch_semdedup_ingest(
 
     def step(ctx: _IngestBatch, batch_df: DataFrame):
         spark, ms, batch_id = ctx.spark, ctx.ms, ctx.batch_id
-        coded = ctx.persist(
+        coded = caching.persist(
             batch_df.select(id_col, vec_col).join(
                 kmeans_assign(batch_df, centroids, id_col, vec_col), id_col
             )
@@ -2175,7 +2153,7 @@ def foreach_batch_semdedup_ingest(
 
         # widen: one-file micro-batch (the near-dup-gate rationale;
         # flat_normalized does NOT widen internally)
-        bm = ctx.persist(flat(widen(coded)))
+        bm = caching.persist(flat(widen(coded)))
         a = bm.alias("a")
         dot = F.expr(pair_dot_expr_spark("a.__v", "b.__v", dim))
         same_cell = F.col("a.cell") == F.col("b.cell")
@@ -2201,7 +2179,7 @@ def foreach_batch_semdedup_ingest(
                 *member_dirs
             )
             pairs = pairs.unionByName(edges(flat(stored), same_cell, True))
-        pairs = ctx.persist(pairs)
+        pairs = caching.persist(pairs)
         n_pairs = pairs.count()
         if n_pairs > cap:
             raise ValueError(
@@ -2459,8 +2437,8 @@ def build_decontam_index(
     # The benchmark corpus is typically one fixture file; doc_shingles
     # widens internally, so the three index writes below shingle on all
     # cores without an outer widen() (ADVICE r16).
-    sh_all = doc_shingles(bench_docs, text_col, id_col).persist()
-    try:
+    with caching.cache_scope(spark):
+        sh_all = caching.persist(doc_shingles(bench_docs, text_col, id_col))
         sh_all.select("shingle").distinct().write.mode("overwrite").parquet(
             str(base / "exact_shingles")
         )
@@ -2486,8 +2464,6 @@ def build_decontam_index(
             num_hashes,
             bands,
         )
-    finally:
-        sh_all.unpersist()
     meta = {
         "num_hashes": num_hashes,
         "bands": bands,
@@ -2604,14 +2580,14 @@ def _decontam_gate(
     """Both decontamination tiers over one batch, shared by the
     decontam and clean sinks: one scan+tokenize pass (doc_shingles
     widens a one-file micro-batch internally — ADVICE r16) feeds
-    _decontam_dirty, whose verdicts `keep` materializes (ctx.persist,
+    _decontam_dirty, whose verdicts `keep` materializes (caching.persist,
     or an eager localCheckpoint where the composed clean sink cuts its
     plan).
     Returns (the clean batch, the dirty ids as `id_col`, per-tier
     reject counts {'exact': n, 'fuzzy': n})."""
     from distributed_mapreduce_spark.operators.dedup import doc_shingles
 
-    sh_raw = ctx.persist(doc_shingles(batch_df, text_col, id_col))
+    sh_raw = caching.persist(doc_shingles(batch_df, text_col, id_col))
     dirty = keep(
         _decontam_dirty(ctx.spark, index_path, meta, sh_raw, min_overlap, min_jaccard)
     )
@@ -2671,7 +2647,7 @@ def foreach_batch_decontam_ingest(
     def step(ctx: _IngestBatch, batch_df: DataFrame):
         clean, dirty_ids, why = _decontam_gate(
             ctx, batch_df, index_path, meta, min_overlap, min_jaccard,
-            id_col, text_col, ctx.persist,
+            id_col, text_col, caching.persist,
         )
         n_rej = dirty_ids.count()
         _, n_acc, touched = _write_accepted(ctx, clean, id_col, id_buckets)
@@ -2763,9 +2739,9 @@ def foreach_batch_clean_ingest(
         # outputs below are localCheckpoint(eager)ed instead of
         # persisted: same reuse, but the logical plan restarts at the
         # checkpoint (the operators/components.py in-loop discipline).
-        # ctx releases the checkpoint blocks by RDD id.
+        # The batch's cache scope releases the checkpoint blocks.
         def truncate(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
+            return caching.local_checkpoint(df)[0]
 
         n_in = batch_df.count()
 

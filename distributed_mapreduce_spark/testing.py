@@ -19,6 +19,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from distributed_mapreduce_spark.caching import cache_scope
 from distributed_mapreduce_spark.sources import TABLES
 
 
@@ -63,9 +64,10 @@ def _canon_rows(rows, col_names):
 
 
 def check_query(spark: SparkSession, name: str, fn, sql: str, sf_dir: str) -> ParityResult:
-    sdf = fn(spark, sf_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    with cache_scope(spark):
+        sdf = fn(spark, sf_dir)
+        spark_cols = sdf.columns
+        spark_rows = [tuple(r) for r in sdf.collect()]
     duck_rows, duck_cols = _duckdb_result(sql, sf_dir)
 
     if sorted(c.lower() for c in spark_cols) != sorted(c.lower() for c in duck_cols):

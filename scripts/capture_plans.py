@@ -32,6 +32,7 @@ def main() -> int:
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
+    from distributed_mapreduce_spark.caching import cache_scope
     from distributed_mapreduce_spark.registry import all_queries, shadow_queries
     from distributed_mapreduce_spark.session import get_spark
 
@@ -45,17 +46,15 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            df = qs[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            with cache_scope(spark):
+                df = qs[name](spark, sf_dir)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
         except Exception as exc:  # noqa: BLE001 - record the failure, keep going
             plan = f"<plan capture failed: {exc}>"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
-        spark.catalog.clearCache()
-        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            jrdd.unpersist(False)
         n_ok += 1
     print(f"captured {n_ok} plans into {out_dir} (*_{suffix}.txt)")
     return 0

@@ -18,6 +18,8 @@ import time
 
 sys.path.insert(0, ".")
 
+from distributed_mapreduce_spark import caching  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -25,27 +27,21 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _clean(spark) -> None:
-    spark.catalog.clearCache()
-    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        jrdd.unpersist(False)
-
-
 def run(spark, builders: dict, passes: int = 3) -> None:
     samples = {n: [] for n in builders}
     # warm pass identical to bench warmup: first execution pays codegen
     for name in builders:
         try:
-            force(builders[name](spark))
+            with caching.cache_scope(spark):
+                force(builders[name](spark))
         except Exception as exc:
             print(f"  warm {name} FAILED: {exc}")
-        _clean(spark)
     for _ in range(passes):
         for name in builders:
-            t0 = time.perf_counter()
-            force(builders[name](spark))
-            samples[name].append(time.perf_counter() - t0)
-            _clean(spark)
+            with caching.cache_scope(spark):
+                t0 = time.perf_counter()
+                force(builders[name](spark))
+                samples[name].append(time.perf_counter() - t0)
     for name, v in samples.items():
         print(f"  {min(v):7.3f}s min (max {max(v):.3f})  {name}")
 
@@ -109,9 +105,11 @@ def _exp_contam_prefilter(spark):
 
     def old_shape(s):
         docs = widen(table(s, SF_DIR, "documents"))
-        sh = doc_shingles(
-            docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
-        ).persist()
+        sh = caching.persist(
+            doc_shingles(
+                docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
+            )
+        )
         bench_sh = sh.where(F.col("is_bench")).select("id", "shingle")
         train_sh = sh.where(~F.col("is_bench")).select("id", "shingle")
         rep = contamination_report(bench_sh, train_sh, CONTAM_MIN_OVERLAP)
@@ -122,9 +120,11 @@ def _exp_contam_prefilter(spark):
 
     def string_prefilter(s):
         docs = widen(table(s, SF_DIR, "documents"))
-        sh = doc_shingles(
-            docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
-        ).persist()
+        sh = caching.persist(
+            doc_shingles(
+                docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
+            )
+        )
         bench_sh = sh.where(F.col("is_bench")).select("id", "shingle")
         train_sh = sh.where(~F.col("is_bench")).select("id", "shingle")
         bench_keys = bench_sh.select("shingle").distinct()
@@ -143,9 +143,11 @@ def _exp_contam_prefilter(spark):
 
     def one_pass(s):
         docs = widen(table(s, SF_DIR, "documents"))
-        sh = doc_shingles(
-            docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
-        ).persist()
+        sh = caching.persist(
+            doc_shingles(
+                docs, carry=((F.col("source") == BENCH_SOURCE).alias("is_bench"),)
+            )
+        )
         # per-shingle train-hit flag in ONE agg over the tagged
         # expansion; bench rows broadcast onto it; one groupBy(id)
         # replaces sizes+hits+outer-join
@@ -197,14 +199,16 @@ def _exp_q6_width(spark):
 
     def _norm_array(s):
         emb = table(s, SF_DIR, "embeddings")
-        return widen(
-            emb.withColumn("__n", norm(F.col("embedding")))
-            .where(F.col("__n") > 0)
-            .select(
-                F.col("vec_id").alias("id"),
-                F.transform("embedding", lambda x: x.cast("double") / F.col("__n")).alias("__v"),
+        return caching.persist(
+            widen(
+                emb.withColumn("__n", norm(F.col("embedding")))
+                .where(F.col("__n") > 0)
+                .select(
+                    F.col("vec_id").alias("id"),
+                    F.transform("embedding", lambda x: x.cast("double") / F.col("__n")).alias("__v"),
+                )
             )
-        ).persist()
+        )
 
     def _pairs(s, dot):
         flat = _norm_array(s)

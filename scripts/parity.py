@@ -24,6 +24,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as e
+    from distributed_mapreduce_spark.caching import cache_scope
     from distributed_mapreduce_spark.testing import check_query
 
     spark = (
@@ -67,11 +68,9 @@ def main() -> int:
             if not res.ok:
                 failures.append(name)
         else:
-            n = fn(spark, sf_dir).count()
+            with cache_scope(spark):
+                n = fn(spark, sf_dir).count()
             print(f"OK  {name}: rows-only, {n} rows ({time.time() - t0:.1f}s)")
-        # Queries that persist() intermediates (jaccard/contam/text_q7)
-        # would otherwise accumulate cached blocks for the whole run.
-        spark.catalog.clearCache()
     if failures:
         print(f"\nFAILED: {failures}")
         return 1

@@ -51,6 +51,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
+    from distributed_mapreduce_spark.caching import cache_scope
     from distributed_mapreduce_spark.registry import all_queries, shadow_queries
 
     qs = {**all_queries(), **shadow_queries()}
@@ -60,24 +61,19 @@ def main() -> int:
     warm = spark.range(n * 1000).repartition(n)
     force(warm.groupBy((F.col("id") % 7).alias("k")).count())
 
-    def clean():
-        spark.catalog.clearCache()
-        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            jrdd.unpersist(False)
-
     # warm executions, then the profiled one
     for _ in range(passes):
-        t0 = time.perf_counter()
-        force(fn(spark, SF_DIR))
-        print(f"pass: {time.perf_counter() - t0:.3f}s", file=sys.stderr)
-        clean()
+        with cache_scope(spark):
+            t0 = time.perf_counter()
+            force(fn(spark, SF_DIR))
+            print(f"pass: {time.perf_counter() - t0:.3f}s", file=sys.stderr)
 
     spark.sparkContext.setJobDescription(f"profiled: {name}")
     marker = time.time() * 1000
-    t0 = time.perf_counter()
-    force(fn(spark, SF_DIR))
-    total = time.perf_counter() - t0
-    clean()
+    with cache_scope(spark):
+        t0 = time.perf_counter()
+        force(fn(spark, SF_DIR))
+        total = time.perf_counter() - t0
     spark.stop()
 
     # parse the event log (two passes: TaskEnd precedes StageCompleted)

@@ -87,6 +87,7 @@ def main() -> int:
     workdir = tempfile.mkdtemp(prefix="dmr_scaling_sf1_")
     synth_sf1(workdir)
 
+    from distributed_mapreduce_spark.caching import cache_scope
     from distributed_mapreduce_spark.registry import all_queries
     from distributed_mapreduce_spark.session import get_spark
 
@@ -99,23 +100,15 @@ def main() -> int:
             qs = all_queries()
             times: dict[str, float] = {}
             for name in QUERIES:  # untimed warm pass
-                force(qs[name](spark, workdir))
-                spark.catalog.clearCache()
-                for jrdd in list(
-                    spark.sparkContext._jsc.getPersistentRDDs().values()
-                ):
-                    jrdd.unpersist(False)
+                with cache_scope(spark):
+                    force(qs[name](spark, workdir))
             samples: dict[str, list[float]] = {n: [] for n in QUERIES}
             for _ in range(passes):
                 for name in QUERIES:
-                    t0 = time.perf_counter()
-                    force(qs[name](spark, workdir))
-                    samples[name].append(time.perf_counter() - t0)
-                    spark.catalog.clearCache()
-                    for jrdd in list(
-                        spark.sparkContext._jsc.getPersistentRDDs().values()
-                    ):
-                        jrdd.unpersist(False)
+                    with cache_scope(spark):
+                        t0 = time.perf_counter()
+                        force(qs[name](spark, workdir))
+                        samples[name].append(time.perf_counter() - t0)
             for name in QUERIES:
                 times[name] = round(min(samples[name]), 2)
                 print(f"  c{cores} {name}: {times[name]}s", file=sys.stderr)

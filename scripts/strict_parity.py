@@ -42,6 +42,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as e
+    from distributed_mapreduce_spark.caching import cache_scope
     from distributed_mapreduce_spark.testing import _duckdb_result
 
     spark = (
@@ -64,12 +65,14 @@ def main() -> int:
     for name in sorted(oracles):
         if only and name not in only:
             continue
-        sdf = qs[name](spark, sf_dir)
-        cols = [c.lower() for c in sdf.columns]
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        srows = sorted(
-            tuple(_canon(t[i]) for i in order) for t in (tuple(r) for r in sdf.collect())
-        )
+        with cache_scope(spark):
+            sdf = qs[name](spark, sf_dir)
+            cols = [c.lower() for c in sdf.columns]
+            order = sorted(range(len(cols)), key=lambda i: cols[i])
+            srows = sorted(
+                tuple(_canon(t[i]) for i in order)
+                for t in (tuple(r) for r in sdf.collect())
+            )
         drows_raw, dcols = _duckdb_result(oracles[name], sf_dir)
         dcols = [c.lower() for c in dcols]
         dorder = sorted(range(len(dcols)), key=lambda i: dcols[i])

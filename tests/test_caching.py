@@ -1,67 +1,117 @@
-"""Operator-scope cache lifecycle (VERDICT r13 #5).
+"""Scoped cache lifetime (caching.cache_scope).
 
-Every batch operator that persist()s a shared subtree must leave a
-release path: the cached frames are attached to the returned DataFrame
-(caching.attach_caches) and caching.release_caches(result) unpersists
-them all. The integration test here runs each persisting operator,
-materializes its result, releases, and asserts ZERO persisted RDDs
-remain — the exact criterion VERDICT r13 #5 names
-(`spark.sparkContext._jsc.getPersistentRDDs`).
+Every persist and localCheckpoint in the package goes through
+caching.persist / caching.local_checkpoint, which register the blocks
+in the innermost active cache_scope; the scope releases exactly those
+on exit. The integration tests here run each persisting operator inside
+a scope, materialize its result, and assert the persistent-RDD set
+(`spark.sparkContext._jsc.getPersistentRDDs`) after the scope equals
+the set before it, with no cached plan left in the CacheManager.
+(Cached plans enter that set once materialized, which every test here
+does; the CacheManager-empty check lives in test_oracle_parity, which
+starts from an empty cache.)
 """
 
 from __future__ import annotations
 
 import pytest
 
+from distributed_mapreduce_spark.caching import (
+    cache_scope,
+    local_checkpoint,
+    persist,
+    persistent_rdd_ids,
+    unpersist_rdd_ids,
+)
 
-def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+def _assert_released(spark, mk):
+    """Build and materialize `mk()` inside a scope; assert it cached
+    something and the scope released all of it."""
+    before = persistent_rdd_ids(spark)
+    with cache_scope(spark):
+        mk().count()
+        assert persistent_rdd_ids(spark) - before, (
+            "operator did not persist anything — the site this test "
+            "covers was removed; update the test"
+        )
+    assert persistent_rdd_ids(spark) == before
 
 
-def _assert_released(spark, df):
-    """Materialize `df`, release its caches, assert zero blocks."""
-    from distributed_mapreduce_spark.caching import release_caches
+def test_scope_releases_what_registered(spark):
+    """persist and local_checkpoint register in the active scope, which
+    releases them on exit; a bare persist inside the scope is not the
+    scope's to release."""
+    before = persistent_rdd_ids(spark)
+    with cache_scope(spark):
+        a = persist(spark.range(10).selectExpr("id * 3 AS id"))
+        b, ids = local_checkpoint(spark.range(7).selectExpr("id * 5 AS id"))
+        assert ids and ids <= persistent_rdd_ids(spark)
+        assert a.count() == 10 and b.count() == 7
+        mid = persistent_rdd_ids(spark)
+        bare = spark.range(6).selectExpr("id * 7 AS id").persist()
+        bare.count()
+        bare_ids = persistent_rdd_ids(spark) - mid
+    assert bare_ids and persistent_rdd_ids(spark) - before == bare_ids
+    bare.unpersist()
+    assert persistent_rdd_ids(spark) == before
 
+
+def test_scope_releases_on_exception_and_nests(spark):
+    """Release runs on an exception too; an inner scope releases only
+    its own registrations, the outer keeps its own until it exits."""
+    before = persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError):
+        with cache_scope(spark):
+            persist(spark.range(11).selectExpr("id * 2 AS id")).count()
+            local_checkpoint(spark.range(12).selectExpr("id * 2 AS id"))
+            raise RuntimeError("boom")
+    assert persistent_rdd_ids(spark) == before
+
+    with cache_scope(spark):
+        outer, outer_ids = local_checkpoint(spark.range(13).selectExpr("id AS x"))
+        with cache_scope(spark):
+            local_checkpoint(spark.range(14).selectExpr("id AS y"))
+        assert persistent_rdd_ids(spark) - before == outer_ids
+        assert outer.count() == 13
+    assert persistent_rdd_ids(spark) == before
+
+
+def test_scope_is_per_thread(spark):
+    """A scope does not capture what another driver thread persists
+    while it is open (a foreachBatch callback thread opens its own)."""
+    import threading
+
+    before = persistent_rdd_ids(spark)
+    other: list = []
+
+    def work():
+        df = persist(spark.range(17).selectExpr("id * 17 AS id"))
+        df.count()
+        other.append(df)
+
+    with cache_scope(spark):
+        persist(spark.range(18).selectExpr("id * 19 AS id")).count()
+        t = threading.Thread(target=work)
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive() and other
+    assert len(persistent_rdd_ids(spark) - before) == 1  # the thread's
+    other[0].unpersist()
+    assert persistent_rdd_ids(spark) == before
+
+
+def test_helpers_without_scope_only_persist(spark):
+    """With no active scope the helpers persist/checkpoint and nothing
+    releases the blocks (the caller owns them)."""
+    before = persistent_rdd_ids(spark)
+    df = persist(spark.range(15).selectExpr("id * 11 AS id"))
     df.count()
-    assert _n_persistent(spark) > 0, (
-        "operator did not persist anything — the site this test covers "
-        "was removed; update the test"
-    )
-    release_caches(df)
-    assert _n_persistent(spark) == 0
-
-
-@pytest.fixture(autouse=True)
-def _clean_cache(spark):
-    spark.catalog.clearCache()
-    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        jrdd.unpersist()
-    yield
-    spark.catalog.clearCache()
-    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        jrdd.unpersist()
-
-
-def test_attach_release_semantics(spark):
-    """attach propagates from sources (persisted frames and frames
-    carrying attachments), dedupes by identity, and release is
-    idempotent and a no-op on unannotated frames."""
-    from distributed_mapreduce_spark.caching import attach_caches, release_caches
-
-    a = spark.range(10).persist()
-    b = spark.range(5)  # not persisted: contributes nothing
-    mid = attach_caches(a.selectExpr("id * 2 AS id"), a, b)
-    assert [c is a for c in mid._dmr_caches] == [True]
-    # propagation + identity dedupe: a arrives via mid AND directly
-    top = attach_caches(mid.selectExpr("id + 1 AS id"), mid, a)
-    assert [c is a for c in top._dmr_caches] == [True]
-    top.count()
-    assert _n_persistent(spark) == 1
-    release_caches(top)
-    assert _n_persistent(spark) == 0
-    release_caches(top)  # idempotent
-    release_caches(b)  # no annotation: no-op
-    assert _n_persistent(spark) == 0
+    _, ids = local_checkpoint(spark.range(16).selectExpr("id * 13 AS id"))
+    assert ids and len(persistent_rdd_ids(spark) - before) == len(ids) + 1
+    df.unpersist()
+    unpersist_rdd_ids(spark, ids)
+    assert persistent_rdd_ids(spark) == before
 
 
 def _docs(spark, n=40):
@@ -95,10 +145,6 @@ def test_dedup_operators_release(spark):
     )
 
     docs = _docs(spark)
-    # construct lazily, one at a time: Spark's CacheManager matches
-    # cached plans STRUCTURALLY, so building two operators over the
-    # same doc_shingles(docs) plan up front would share one cache
-    # entry and the first release would strip the second's blocks
     for mk in (
         lambda: jaccard_pairs(doc_shingles(docs), 0.5),
         lambda: minhash_near_dup_pairs(docs, 0.5),
@@ -109,7 +155,7 @@ def test_dedup_operators_release(spark):
         lambda: dup_span_coverage(docs),
         lambda: span_scrub(docs),
     ):
-        _assert_released(spark, mk())
+        _assert_released(spark, mk)
 
 
 def test_iterative_ml_operators_release(spark):
@@ -130,16 +176,13 @@ def test_iterative_ml_operators_release(spark):
         [(float(i % 5), float(i % 7), 1.0 if i % 2 else -1.0) for i in range(20)],
         "f1 double, f2 double, y double",
     )
-    # lazily, one at a time — see the plan-sharing note in
-    # test_dedup_operators_release (kmeans and power_iteration cache
-    # the same structural flat-projection plan)
     for mk in (
         lambda: kmeans_lloyd(emb, dim=4, k=3, iters=2),
         lambda: power_iteration(emb, dim=4, iters=2),
         lambda: linreg_gd(xy, iters=2),
         lambda: linsvm_gd(svm, ["f1", "f2"], iters=2),
     ):
-        _assert_released(spark, mk())
+        _assert_released(spark, mk)
 
 
 def test_similarity_and_sampling_release(spark):
@@ -153,8 +196,8 @@ def test_similarity_and_sampling_release(spark):
 
     emb = _emb(spark)
     cents = train_centroids_kmeans(emb, num_cells=3)
-    _assert_released(spark, knn_join_ivf(emb, cents, k=2, nprobe=2))
-    _assert_released(spark, global_shuffle_index(_docs(spark), "doc_id"))
+    _assert_released(spark, lambda: knn_join_ivf(emb, cents, k=2, nprobe=2))
+    _assert_released(spark, lambda: global_shuffle_index(_docs(spark), "doc_id"))
 
 
 def test_query_builders_release(spark):
@@ -164,19 +207,19 @@ def test_query_builders_release(spark):
     )
 
     emb = _emb(spark)
-    _assert_released(spark, label_centroid_profile(emb, dim=4))
-    _assert_released(spark, semdedup_representatives(emb, dim=4, k=3, iters=1))
+    _assert_released(spark, lambda: label_centroid_profile(emb, dim=4))
+    _assert_released(
+        spark, lambda: semdedup_representatives(emb, dim=4, k=3, iters=1)
+    )
 
 
 def test_graph_checkpoints_release(spark):
-    """connected_components / pagerank use localCheckpoint (no
-    CacheManager entry — DataFrame.unpersist can't reach the blocks):
-    superseded iteration checkpoints are freed in-loop, the edge
-    checkpoint is freed when iteration stops, and the surviving final
-    checkpoint is attached as RDD ids for release_caches. The driver
-    union-find branch frees its edge checkpoint eagerly and returns an
-    attachment-free frame."""
-    from distributed_mapreduce_spark.caching import release_caches
+    """connected_components / pagerank checkpoint (no CacheManager
+    entry — DataFrame.unpersist can't reach the blocks): superseded
+    generations and the edge checkpoints are freed inside the operator,
+    so only the final checkpoint the result reads is left for the
+    caller's scope. The driver union-find branch frees its edge
+    checkpoint itself and returns a driver-built frame."""
     from distributed_mapreduce_spark.operators.components import (
         connected_components,
         pagerank,
@@ -185,38 +228,72 @@ def test_graph_checkpoints_release(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], "id_i bigint, id_j bigint"
     )
-    # driver branch: checkpoint freed inside the operator
-    cc = connected_components(edges)
-    cc.count()
-    assert _n_persistent(spark) == 0
-    # distributed branch: only the final label checkpoint survives
-    ccd = connected_components(edges, driver_max_edges=0)
-    got = {r.id: r.component for r in ccd.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
-    assert _n_persistent(spark) == 1  # one label generation, not one per iter
-    release_caches(ccd)
-    assert _n_persistent(spark) == 0
-    pr = pagerank(edges)
-    assert pr.count() == 5
-    assert _n_persistent(spark) == 1  # final rank checkpoint only
-    release_caches(pr)
-    assert _n_persistent(spark) == 0
+    before = persistent_rdd_ids(spark)
+    # driver branch: checkpoint freed inside the operator, no scope
+    assert connected_components(edges).count() == 5
+    assert persistent_rdd_ids(spark) == before
+    with cache_scope(spark):
+        # distributed branch: only the final label checkpoint survives
+        ccd = connected_components(edges, driver_max_edges=0)
+        got = {r.id: r.component for r in ccd.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+        assert len(persistent_rdd_ids(spark) - before) == 1
+    assert persistent_rdd_ids(spark) == before
+    with cache_scope(spark):
+        assert pagerank(edges).count() == 5
+        assert len(persistent_rdd_ids(spark) - before) == 1  # final ranks
+    assert persistent_rdd_ids(spark) == before
     # iters=0 edge: the lazy result still reads the deg checkpoint —
-    # it must stay alive until release (r14 self-review)
-    pr0 = pagerank(edges, iters=0)
-    assert pr0.count() == 5 and {r.pr for r in pr0.collect()} == {0.2}
-    release_caches(pr0)
-    assert _n_persistent(spark) == 0
+    # it must stay alive until the scope exits (r14 self-review)
+    with cache_scope(spark):
+        pr0 = pagerank(edges, iters=0)
+        assert pr0.count() == 5 and {r.pr for r in pr0.collect()} == {0.2}
+    assert persistent_rdd_ids(spark) == before
+
+
+def test_bpe_releases_vocab_generations(spark, monkeypatch):
+    """bpe_train / bpe_train_batched free each superseded vocab
+    checkpoint in-loop (at most two generations live, at the moment a
+    new one lands) and leave nothing persisted once they return."""
+    from distributed_mapreduce_spark import caching
+    from distributed_mapreduce_spark.operators.bpe import (
+        CHECKPOINT_EVERY,
+        bpe_train,
+        bpe_train_batched,
+    )
+
+    docs = _docs(spark, n=12)
+    real = caching.local_checkpoint
+    live: list[int] = []
+
+    def counting(df):
+        out = real(df)
+        live.append(len(persistent_rdd_ids(spark) - before))
+        return out
+
+    monkeypatch.setattr(caching, "local_checkpoint", counting)
+    n = 2 * CHECKPOINT_EVERY  # the fixture corpus has ~23 merges
+    for train in (
+        lambda: bpe_train(docs, n),
+        lambda: bpe_train_batched(docs, n, batch_size=1),
+    ):
+        before = persistent_rdd_ids(spark)
+        live.clear()
+        assert len(train()) == n
+        assert len(live) == 3  # initial vocab + one per CHECKPOINT_EVERY
+        assert max(live) == 2 * live[0]
+        assert persistent_rdd_ids(spark) == before
 
 
 def test_error_paths_do_not_leak_blocks(spark):
-    """The refusal paths unpersist before raising: zero-variance /
-    empty power_iteration, NULL-key shuffle index."""
+    """The refusal paths unpersist before raising, with no scope:
+    zero-variance / empty power_iteration, NULL-key shuffle index."""
     from distributed_mapreduce_spark.operators.sampling import (
         global_shuffle_index,
     )
     from distributed_mapreduce_spark.operators.similarity import power_iteration
 
+    before = persistent_rdd_ids(spark)
     flatd = spark.createDataFrame(
         [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(5)],
         "vec_id bigint, embedding array<float>",
@@ -228,35 +305,4 @@ def test_error_paths_do_not_leak_blocks(spark):
     )
     with pytest.raises(ValueError):
         global_shuffle_index(docs, "doc_id").count()
-    assert _n_persistent(spark) == 0
-
-
-def test_derived_frame_annotation_survival_rule(spark):
-    """VERDICT r14 #4: the annotation lives on the EXACT returned
-    object — deriving a new frame (`annotated.select(...)`) silently
-    drops it. This test pins the spec composition code leans on:
-    releasing the DERIVED frame is a no-op (the leak shape), releasing
-    the ORIGINAL still frees everything, and explicit forwarding via
-    attach_caches(derived, annotated) restores releasability."""
-    from distributed_mapreduce_spark.caching import attach_caches, release_caches
-
-    src = spark.range(20).persist()
-    annotated = attach_caches(src.selectExpr("id * 2 AS id"), src)
-    derived = annotated.select("id")
-    derived.count()
-    assert _n_persistent(spark) == 1
-    # leak shape: the derived frame carries no annotation
-    release_caches(derived)
-    assert _n_persistent(spark) == 1
-    # supported path 1: release the ORIGINAL annotated frame
-    release_caches(annotated)
-    assert _n_persistent(spark) == 0
-
-    # supported path 2: forward the annotation explicitly
-    src2 = spark.range(20).persist()
-    annotated2 = attach_caches(src2.selectExpr("id * 2 AS id"), src2)
-    derived2 = attach_caches(annotated2.select("id"), annotated2)
-    derived2.count()
-    assert _n_persistent(spark) == 1
-    release_caches(derived2)
-    assert _n_persistent(spark) == 0
+    assert persistent_rdd_ids(spark) == before

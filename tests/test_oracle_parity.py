@@ -16,6 +16,7 @@ from distributed_mapreduce_spark.registry import (
     shadow_oracles,
     shadow_queries,
 )
+from distributed_mapreduce_spark.caching import cache_scope, persistent_rdd_ids
 from distributed_mapreduce_spark.testing import check_query
 
 _QUERIES = all_queries()
@@ -24,10 +25,29 @@ _SHADOW_Q = shadow_queries()
 _SHADOW_O = shadow_oracles()
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _empty_cache_at_start(spark):
+    """Tests elsewhere in the session call operators outside any cache
+    scope and keep their blocks; start this module from an empty cache
+    so the CacheManager check below is about the query alone."""
+    spark.catalog.clearCache()
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist()
+
+
+def _check_without_leaks(spark, sf_dir, name, fn, sql):
+    """Oracle parity, plus: the query's cache scope (check_query)
+    leaves no cached plan and no persistent RDD behind."""
+    before = persistent_rdd_ids(spark)
+    res = check_query(spark, name, fn, sql, sf_dir)
+    assert res.ok, f"{name}: {res.detail}"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
+    assert persistent_rdd_ids(spark) == before, name
+
+
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_oracle_parity(spark, sf_dir, name):
-    res = check_query(spark, name, _QUERIES[name], _ORACLES[name], sf_dir)
-    assert res.ok, f"{name}: {res.detail}"
+    _check_without_leaks(spark, sf_dir, name, _QUERIES[name], _ORACLES[name])
 
 
 @pytest.mark.parametrize("name", sorted(_SHADOW_O))
@@ -35,8 +55,7 @@ def test_oracle_parity(spark, sf_dir, name):
 def test_shadow_oracle_parity(spark, sf_dir, name):
     """Shadow-tier queries (near-twin variants kept out of the driver's
     grading window, registry.py) get the same DuckDB parity check."""
-    res = check_query(spark, name, _SHADOW_Q[name], _SHADOW_O[name], sf_dir)
-    assert res.ok, f"{name}: {res.detail}"
+    _check_without_leaks(spark, sf_dir, name, _SHADOW_Q[name], _SHADOW_O[name])
 
 
 def test_registry_within_grading_cap():
@@ -51,8 +70,8 @@ def test_all_queries_return_rows(spark, sf_dir):
     for name, fn in _QUERIES.items():
         if name in _ORACLES:
             continue
-        df = fn(spark, sf_dir)
-        assert df.count() >= 0, name
+        with cache_scope(spark):
+            assert fn(spark, sf_dir).count() >= 0, name
 
 
 def test_entry_smoke(spark):

@@ -560,31 +560,19 @@ def test_global_shuffle_index_permutation_and_null_guard(spark):
 
 def test_global_shuffle_index_blocks_have_release_path(spark):
     """The scanned-once intermediate must be releasable (ADVICE r9):
-    persist — not localCheckpoint — so spark.catalog.clearCache() frees
-    its blocks (checkpoint RDD blocks are invisible to the
-    CacheManager and leaked across repeated library calls). Lineage is
-    retained, so the released result still collects correctly."""
+    persist — not localCheckpoint — so its cache scope frees its blocks
+    and the lineage survives the release: the released result still
+    collects correctly."""
+    from distributed_mapreduce_spark.caching import cache_scope, persistent_rdd_ids
     from distributed_mapreduce_spark.operators.sampling import global_shuffle_index
 
-    def live_rdd_blocks():
-        return sum(
-            1
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values()
-        )
-
-    spark.catalog.clearCache()
-    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        jrdd.unpersist(False)
-    base = live_rdd_blocks()
-
     df = spark.range(300).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-    out = global_shuffle_index(df, "k", seed="3", buckets=8)
-    first = {r.k: r.pos for r in out.collect()}
-
-    spark.catalog.clearCache()
-    assert live_rdd_blocks() <= base, (
-        "global_shuffle_index's intermediate survived clearCache — "
-        "no release path (the localCheckpoint leak, ADVICE r9)"
+    before = persistent_rdd_ids(spark)
+    with cache_scope(spark):
+        out = global_shuffle_index(df, "k", seed="3", buckets=8)
+        first = {r.k: r.pos for r in out.collect()}
+    assert persistent_rdd_ids(spark) == before, (
+        "global_shuffle_index's intermediate survived its cache scope"
     )
     # post-release the plan recomputes from lineage, same permutation
     assert {r.k: r.pos for r in out.collect()} == first

@@ -46,14 +46,21 @@ def test_anti_join_no_cartesian(spark, sf_dir):
     plans.assert_no_cartesian(rel_q12_customers_without_orders(spark, sf_dir))
 
 
-@pytest.mark.full_tier
-def test_no_cartesian_in_any_registered_query(spark, sf_dir):
-    """Registry-wide plan guard over BOTH tiers (50 registered + all
-    shadow queries): no batch query may plan a CartesianProduct, and
-    none may plan a BroadcastNestedLoopJoin except the range join
-    (ev_q6), whose non-equi band predicate is exactly what BNLJ is for
-    (4-row broadcast side). Streaming queries execute on call, so
-    they're guarded by their own tests instead."""
+def test_registry_wide_plan_guards(spark, sf_dir):
+    """Registry-wide plan guards over BOTH tiers (50 registered + all
+    shadow queries), each query built once inside a cache scope so the
+    builders' eager persists do not pile up across the sweep. Streaming
+    queries execute on call, so they're guarded by their own tests.
+
+    - No batch query may plan a CartesianProduct, and none may plan a
+      BroadcastNestedLoopJoin except where the broadcast side is O(1)
+      rows (`bnlj_allowed`).
+    - Scale guard (VERDICT r7 #5): `row_number() OVER (ORDER BY …)`
+      with no PARTITION BY plans a single-partition Window — one task
+      sorts the whole input. global_shuffle_index exists precisely to
+      avoid that shape; nothing in either tier may sneak one in. No
+      allowlist: zero queries are expected to need a global window."""
+    from distributed_mapreduce_spark.caching import cache_scope
     from distributed_mapreduce_spark.registry import all_queries, shadow_queries
 
     # BNLJ is legitimate exactly when the broadcast side is O(1) rows:
@@ -93,14 +100,19 @@ def test_no_cartesian_in_any_registered_query(spark, sf_dir):
     for name, fn in {**all_queries(), **shadow_queries()}.items():
         if name.startswith("st_"):
             continue
-        plan = plans.physical_plan(fn(spark, sf_dir))
+        with cache_scope(spark):
+            df = fn(spark, sf_dir)
+            plan = plans.physical_plan(df)
+            offenders = plans.global_window_nodes(df)
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian:\n{plan}"
         if name not in bnlj_allowed:
             assert "BroadcastNestedLoopJoin" not in plan, (
                 f"{name} plans a nested-loop join:\n{plan}"
             )
+        assert not offenders, f"{name} plans a global (empty-partition) window:\n" + "\n".join(offenders)
         checked += 1
     assert checked >= 55, f"plan guard covered only {checked} queries"
+    assert checked >= 90, f"global-window guard covered only {checked} queries"
 
 
 def test_cdc_merge_base_unshuffled(spark, sf_dir):
@@ -230,26 +242,6 @@ def test_dup_spans_partial_agg_and_semi_join(spark, sf_dir):
     plans.assert_partial_agg(df)
     p = plans.physical_plan(df)
     assert "LeftSemi" in p, p
-
-
-@pytest.mark.full_tier
-def test_no_global_window_in_any_query(spark, sf_dir):
-    """Registry-wide scale guard (VERDICT r7 #5): `row_number() OVER
-    (ORDER BY …)` with no PARTITION BY plans a single-partition Window
-    — one task sorts the whole input. global_shuffle_index exists
-    precisely to avoid that shape; nothing in either tier may sneak
-    one in. No allowlist: zero queries are expected to need a global
-    window."""
-    from distributed_mapreduce_spark.registry import all_queries, shadow_queries
-
-    checked = 0
-    for name, fn in {**all_queries(), **shadow_queries()}.items():
-        if name.startswith("st_"):
-            continue  # streaming queries execute on call; guarded in their own tests
-        offenders = plans.global_window_nodes(fn(spark, sf_dir))
-        assert not offenders, f"{name} plans a global (empty-partition) window:\n" + "\n".join(offenders)
-        checked += 1
-    assert checked >= 90, f"global-window guard covered only {checked} queries"
 
 
 def test_registry_matches_declared_counts():

@@ -9,6 +9,7 @@ import pyarrow.parquet as pq
 import os
 import time
 
+from distributed_mapreduce_spark.caching import cache_scope, persist, persistent_rdd_ids
 from distributed_mapreduce_spark.streaming import event_stream
 from distributed_mapreduce_spark.streaming.sinks import parquet_stream_sink
 
@@ -2605,34 +2606,33 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
     )
 
     train = docs.where(F.col("source") != BENCH_SOURCE)
-    sh_all = doc_shingles(docs, carry=((F.col("source") == BENCH_SOURCE).alias("b"),)).persist()
-    bench_sh = sh_all.where(F.col("b")).select("id", "shingle")
-    train_sh = sh_all.where(~F.col("b")).select("id", "shingle")
-    rep = contamination_report(train_sh, bench_sh, 0.5)
-    dirty_exact = rep.where(F.col("contaminated")).select("id")
-    hot = bench_sh.groupBy("shingle").count().where(F.col("count") > 50).select("shingle")
-    sh_f = sh_all.join(hot, "shingle", "left_anti")
-    pairs = jaccard_pairs(sh_f.select("id", "shingle"), 0.5)
-    flags = sh_f.select("id", "b").distinct()
-    cross = (
-        pairs.join(flags.withColumnRenamed("id", "id_i").withColumnRenamed("b", "bi"), "id_i")
-        .join(flags.withColumnRenamed("id", "id_j").withColumnRenamed("b", "bj"), "id_j")
-        .where(F.col("bi") != F.col("bj"))
-    )
-    dirty_fuzzy = (
-        cross.select(F.when(F.col("bi"), F.col("id_j")).otherwise(F.col("id_i")).alias("id"))
-        .distinct()
-    )
-    survivors = train.join(
-        dirty_exact.unionByName(dirty_fuzzy).distinct().withColumnRenamed("id", "doc_id"),
-        "doc_id",
-        "left_anti",
-    )
-    want = sorted(r.doc_id for r in survivors.select("doc_id").collect())
-    sh_all.unpersist()
-    from distributed_mapreduce_spark.caching import release_caches
-
-    release_caches(pairs)  # jaccard_pairs attaches its internal cache
+    with cache_scope(spark):  # frees sh_all and jaccard_pairs' cache
+        sh_all = persist(
+            doc_shingles(docs, carry=((F.col("source") == BENCH_SOURCE).alias("b"),))
+        )
+        bench_sh = sh_all.where(F.col("b")).select("id", "shingle")
+        train_sh = sh_all.where(~F.col("b")).select("id", "shingle")
+        rep = contamination_report(train_sh, bench_sh, 0.5)
+        dirty_exact = rep.where(F.col("contaminated")).select("id")
+        hot = bench_sh.groupBy("shingle").count().where(F.col("count") > 50).select("shingle")
+        sh_f = sh_all.join(hot, "shingle", "left_anti")
+        pairs = jaccard_pairs(sh_f.select("id", "shingle"), 0.5)
+        flags = sh_f.select("id", "b").distinct()
+        cross = (
+            pairs.join(flags.withColumnRenamed("id", "id_i").withColumnRenamed("b", "bi"), "id_i")
+            .join(flags.withColumnRenamed("id", "id_j").withColumnRenamed("b", "bj"), "id_j")
+            .where(F.col("bi") != F.col("bj"))
+        )
+        dirty_fuzzy = (
+            cross.select(F.when(F.col("bi"), F.col("id_j")).otherwise(F.col("id_i")).alias("id"))
+            .distinct()
+        )
+        survivors = train.join(
+            dirty_exact.unionByName(dirty_fuzzy).distinct().withColumnRenamed("id", "doc_id"),
+            "doc_id",
+            "left_anti",
+        )
+        want = sorted(r.doc_id for r in survivors.select("doc_id").collect())
     assert ids == want
 
     # fresh checkpoint, same store: every committed batch short-circuits
@@ -2710,12 +2710,11 @@ def test_clean_ingest_streamed_equals_batch_composition(spark, tmp_path):
         read_ingest_accepted,
     )
 
-    # the zero-blocks assertion below is about THIS sink: start from a
-    # clean slate so a block leaked by an unrelated earlier test (the
-    # suite shares one session) cannot fail it (r15 full-suite lesson)
-    spark.catalog.clearCache()
-    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        jrdd.unpersist()
+    # the no-leak assertion below is about THIS sink (index build and
+    # ingest): compare against the blocks live before it, so a block
+    # leaked by an unrelated earlier test (the suite shares one session)
+    # cannot fail it (r15 full-suite lesson)
+    before = persistent_rdd_ids(spark)
 
     sf = "/root/testdata/sf0.001"
     docs = widen(table(spark, sf, "documents"))
@@ -2753,54 +2752,51 @@ def test_clean_ingest_streamed_equals_batch_composition(spark, tmp_path):
     store = str(tmp_path / "store")
     got = run(store, str(tmp_path / "ckpt"))
     assert len(got) == len(set(got)), "duplicate survivors"
-    n_blocks = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert n_blocks == 0, f"{n_blocks} persisted RDDs leaked by the sink"
+    leaked = persistent_rdd_ids(spark) - before
+    assert not leaked, f"{len(leaked)} persisted RDDs leaked by the sink"
 
     # batch composition, stage by stage
     train = docs.where(F.col("source") != BENCH_SOURCE)
     q_pass = train.where(quality)
-    sh_all = doc_shingles(
-        docs, carry=((F.col("source") == BENCH_SOURCE).alias("b"),)
-    ).persist()
-    bench_sh = sh_all.where(F.col("b")).select("id", "shingle")
-    rep = contamination_report(
-        sh_all.where(~F.col("b")).select("id", "shingle"), bench_sh, 0.5
-    )
-    dirty_exact = rep.where(F.col("contaminated")).select("id")
-    hot = bench_sh.groupBy("shingle").count().where(F.col("count") > 50).select("shingle")
-    sh_f = sh_all.join(hot, "shingle", "left_anti")
-    pairs = jaccard_pairs(sh_f.select("id", "shingle"), 0.5)
-    flags = sh_f.select("id", "b").distinct()
-    cross = (
-        pairs.join(flags.withColumnRenamed("id", "id_i").withColumnRenamed("b", "bi"), "id_i")
-        .join(flags.withColumnRenamed("id", "id_j").withColumnRenamed("b", "bj"), "id_j")
-        .where(F.col("bi") != F.col("bj"))
-    )
-    dirty_fuzzy = cross.select(
-        F.when(F.col("bi"), F.col("id_j")).otherwise(F.col("id_i")).alias("id")
-    ).distinct()
-    clean = q_pass.join(
-        dirty_exact.unionByName(dirty_fuzzy).distinct().withColumnRenamed("id", "doc_id"),
-        "doc_id",
-        "left_anti",
-    )
-    from pyspark.sql import Window
-
-    exact_kept = (
-        clean.withColumn("_fp", fingerprint("text"))
-        .withColumn(
-            "_rk",
-            F.row_number().over(Window.partitionBy("_fp").orderBy("doc_id")),
+    with cache_scope(spark):  # frees sh_all and jaccard_pairs' cache
+        sh_all = persist(
+            doc_shingles(docs, carry=((F.col("source") == BENCH_SOURCE).alias("b"),))
         )
-        .where(F.col("_rk") == 1)
-        .drop("_rk", "_fp")
-    )
-    survivors = dedup_corpus_greedy(exact_kept, 0.5)
-    want = sorted(r.doc_id for r in survivors.select("doc_id").collect())
-    sh_all.unpersist()
-    from distributed_mapreduce_spark.caching import release_caches
+        bench_sh = sh_all.where(F.col("b")).select("id", "shingle")
+        rep = contamination_report(
+            sh_all.where(~F.col("b")).select("id", "shingle"), bench_sh, 0.5
+        )
+        dirty_exact = rep.where(F.col("contaminated")).select("id")
+        hot = bench_sh.groupBy("shingle").count().where(F.col("count") > 50).select("shingle")
+        sh_f = sh_all.join(hot, "shingle", "left_anti")
+        pairs = jaccard_pairs(sh_f.select("id", "shingle"), 0.5)
+        flags = sh_f.select("id", "b").distinct()
+        cross = (
+            pairs.join(flags.withColumnRenamed("id", "id_i").withColumnRenamed("b", "bi"), "id_i")
+            .join(flags.withColumnRenamed("id", "id_j").withColumnRenamed("b", "bj"), "id_j")
+            .where(F.col("bi") != F.col("bj"))
+        )
+        dirty_fuzzy = cross.select(
+            F.when(F.col("bi"), F.col("id_j")).otherwise(F.col("id_i")).alias("id")
+        ).distinct()
+        clean = q_pass.join(
+            dirty_exact.unionByName(dirty_fuzzy).distinct().withColumnRenamed("id", "doc_id"),
+            "doc_id",
+            "left_anti",
+        )
+        from pyspark.sql import Window
 
-    release_caches(pairs)  # jaccard_pairs attaches its internal cache
+        exact_kept = (
+            clean.withColumn("_fp", fingerprint("text"))
+            .withColumn(
+                "_rk",
+                F.row_number().over(Window.partitionBy("_fp").orderBy("doc_id")),
+            )
+            .where(F.col("_rk") == 1)
+            .drop("_rk", "_fp")
+        )
+        survivors = dedup_corpus_greedy(exact_kept, 0.5)
+        want = sorted(r.doc_id for r in survivors.select("doc_id").collect())
     assert got == want
 
     # fresh checkpoint, different batching: committed batches
@@ -3063,12 +3059,11 @@ def test_ingest_sink_crash_matrix(
     """A batch that fails after store write k (or at the near-dup
     refusal) and before its manifest commit: the failure surfaces, the
     persistent-RDD set is what it was before the run (the skeleton's
-    release scope covers the failing batch), and the replay from the
+    cache scope covers the failing batch), and the replay from the
     same checkpoint equals the uncrashed run."""
     from pyspark.errors import StreamingQueryException
 
     import distributed_mapreduce_spark.operators.dedup as dedup_mod
-    from distributed_mapreduce_spark.caching import persistent_rdd_ids
 
     if sink not in uncrashed_runs:
         ref = str(tmp_path / "ref")
